@@ -230,3 +230,45 @@ def test_facet_top_caps_categories(engine):
         assert resp["facets"]["lang"] == top1
     finally:
         srv.shutdown()
+
+
+def test_facets_reject_must_and_title_clauses(spark, engine, index_dir):
+    """Under negation, +must and title: clauses gate the results but
+    not the facet match set: facets refuse the combination (a clean
+    400 over HTTP) on both engines, while a bare/-NOT query still
+    counts."""
+    from wiki_search_engine_spark.server import start_server
+    from wiki_search_engine_spark.sources.synth import vocabulary
+    from wiki_search_engine_spark.tiered import TieredEngine
+
+    words = vocabulary(42)[0]
+    bad = [
+        f"{words[3]} +{words[50]}",
+        f"title:{words[3]} {words[50]}",
+        f"{words[3]} -title:{words[50]}",
+    ]
+    teng = TieredEngine(spark, [index_dir])
+    for eng in (engine, teng):
+        for q in bad:
+            with pytest.raises(ValueError, match="facets"):
+                eng.facet_counts(q, field="lang", negation=True)
+        # without the boolean flag the same text is a bag query
+        assert eng.facet_counts(bad[0], field="lang") == (
+            engine.facet_counts(bad[0], field="lang")
+        )
+        assert eng.facet_counts(
+            f"{words[3]} -{words[20]}", field="lang", negation=True
+        )
+    srv = start_server(engine, port=0, path_mode="local")
+    try:
+        port = srv.server_address[1]
+        url = (
+            f"http://127.0.0.1:{port}/query-stem?query="
+            f"{urllib.parse.quote(bad[0])}&negation=true&facets=lang"
+        )
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            urllib.request.urlopen(url, timeout=30)
+        assert ei.value.code == 400
+        assert "facets" in json.load(ei.value)["error"]
+    finally:
+        srv.shutdown()

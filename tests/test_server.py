@@ -105,6 +105,12 @@ def test_server_over_tiered_engine(spark, engine, index_dir):
         with pytest.raises(urllib.error.HTTPError) as ei:
             _get(srv, "/query-stem?query=%20")
         assert ei.value.code == 400
+        # the static boost is single-index only: a clean 400, not a 500
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _get(srv, f"/query-stem?query={q}&optionName=bm25"
+                      "&boost=static")
+        assert ei.value.code == 400
+        assert "single-index" in json.loads(ei.value.read())["error"]
     finally:
         srv.shutdown()
 

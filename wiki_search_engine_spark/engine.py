@@ -24,6 +24,7 @@ from .operators.postings import DEFAULT_BUCKETS, decode_postings_df, term_bucket
 from .operators.scoring import score_exhaustive
 from .operators.wand import search_topk
 from .plans.build import build_index
+from .pointread import PointReader
 
 
 class EmptyQueryError(ValueError):
@@ -223,6 +224,46 @@ def assemble_reference_response(
     return resp
 
 
+def facet_query_terms(
+    eng, query: str, negation: bool
+) -> tuple[list[str], list[str]] | None:
+    """(positive terms, excluded terms) of the match set facet counts
+    run over — every doc holding any positive term and no excluded one
+    — or None when that set is empty. Shared by SearchEngine and
+    TieredEngine. Under ``negation`` a ``+must`` or ``title:`` clause
+    would gate the results but not this OR-of-terms set, so the counts
+    would describe other docs than the page returns: that combination
+    raises ValueError (HTTP 400) instead."""
+    from .functions.analyzer import (
+        resolve_boolean_overlap, split_boolean, split_field_terms,
+    )
+
+    excluded: list[str] = []
+    if negation:
+        should_q, must_q, neg_q = split_boolean(query)
+        if must_q.strip() or split_field_terms(
+            f"{should_q} {neg_q}"
+        )[1]:
+            raise ValueError(
+                "facets do not compose with +must or title: clauses"
+            )
+        if neg_q.strip():
+            try:
+                excluded = eng.analyze(neg_q)
+            except EmptyQueryError:
+                excluded = []
+        query = should_q.strip()
+        if not query:
+            return None
+    terms = (
+        eng.expand_query_terms(query)
+        if "*" in (query or "")
+        else eng.analyze(query)
+    )
+    terms, _ = resolve_boolean_overlap(terms, None, excluded)
+    return (terms, excluded) if terms else None
+
+
 class SearchEngine:
     def __init__(
         self,
@@ -240,7 +281,8 @@ class SearchEngine:
         ~25ms (two pyarrow reads) to sub-ms. The cache belongs to THIS
         engine instance and therefore to the index snapshot it opened —
         after an index swap (streaming maintenance) load a fresh engine
-        or call clear_cache()."""
+        or call clear_cache(), which also drops the cached parquet
+        footers."""
         import json
         import os
 
@@ -294,6 +336,9 @@ class SearchEngine:
 
         self._cache_cap = int(cache_terms)
         self._datasets: dict = {}
+        # footer-cached point reads (pointread.py); directories open
+        # lazily on their first lookup, never here
+        self._reader = PointReader()
         self._term_cache: "OrderedDict[str, tuple[int, list]]" = (
             OrderedDict()
         )
@@ -306,17 +351,14 @@ class SearchEngine:
     def clear_cache(self) -> None:
         with self._cache_lock:
             self._term_cache.clear()
+        self._reader.invalidate(self.index_dir)
 
     def _cached_term_lists(self, terms: list[str]):
         """(term -> (df, [(salt, blocks), ...])) for every present term,
         loading misses from the lexicon + postings buckets and evicting
-        LRU past ``cache_terms``. df == 0 terms are cached as absent."""
-        import os
-
-        import pyarrow.parquet as pq
-
-        from .operators.postings import term_bucket
-
+        LRU past ``cache_terms``. df == 0 terms are cached as absent.
+        Postings rows come from footer-cached point reads of each
+        term's bucket directory (``PointReader``)."""
         out: dict[str, tuple[int, list]] = {}
         missing: list[str] = []
         with self._cache_lock:
@@ -338,14 +380,12 @@ class SearchEngine:
                     term_bucket(t, self.n_buckets), []
                 ).append(t)
             for b, ts in by_bucket.items():
-                d = f"{self.index_dir}/postings/bucket={b}"
-                if not os.path.isdir(d):
-                    continue
-                tbl = pq.read_table(
-                    d,
-                    columns=["term", "salt", "blocks"],
-                    filters=[("term", "in", ts)],
+                tbl = self._reader.lookup(
+                    f"{self.index_dir}/postings/bucket={b}", "term", ts,
+                    ["term", "salt", "blocks"],
                 )
+                if tbl is None:
+                    continue
                 for row in tbl.to_pylist():
                     t = row["term"]
                     loaded[t] = (
@@ -463,26 +503,23 @@ class SearchEngine:
 
     def term_df(self, terms: list[str]) -> dict[str, int]:
         """Driver-side lexicon lookup: global df per query term from the
-        term_stats side table — pyarrow over the terms' bucket directories
-        only (dictionary-compressed, term-sorted), NO Spark job. The
-        reference's analogue is the metaData/posting-length read per query
+        term_stats side table, NO Spark job. Only the terms' bucket
+        directories are touched; within them the footers (parsed once
+        per engine, ``PointReader``) prune to the term-sorted row groups
+        whose [min, max] can hold a query term. The reference's analogue
+        is the metaData/posting-length read per query
         (mongoService.js:16-32)."""
-        import os
-
-        import pyarrow.parquet as pq
-
         out: dict[str, int] = {}
         by_bucket: dict[int, list[str]] = {}
         for t in terms:
             by_bucket.setdefault(term_bucket(t, self.n_buckets), []).append(t)
         for b, ts in by_bucket.items():
-            d = f"{self.index_dir}/term_stats/bucket={b}"
-            if not os.path.isdir(d):
-                continue
-            tbl = pq.read_table(
-                d, columns=["term", "df"],
-                filters=[("term", "in", ts)],
+            tbl = self._reader.lookup(
+                f"{self.index_dir}/term_stats/bucket={b}", "term", ts,
+                ["term", "df"],
             )
+            if tbl is None:
+                continue
             for term, df in zip(
                 tbl.column("term").to_pylist(), tbl.column("df").to_pylist()
             ):
@@ -555,19 +592,17 @@ class SearchEngine:
             analyzer=analyzer or self.analyzer,
         )
         self._title_cache = {}
+        self._reader.invalidate(f"{self.index_dir}/title_tf")
 
     def _title_rows(self, terms: list[str]) -> dict:
         """term -> (docids, title_tfs, body_doc_lens) numpy arrays from
         the title_tf sidecar — pyarrow over the terms' bucket
-        directories (term-sorted row groups), no Spark job, same read
-        shape as term_df. Missing sidecar raises with the titleindex
-        remedy."""
+        directories (term-sorted row groups), no Spark job, the same
+        footer-cached point read as term_df. Missing sidecar raises with
+        the titleindex remedy."""
         import os
 
         import numpy as np
-        import pyarrow.parquet as pq
-
-        from .operators.postings import term_bucket
 
         root = f"{self.index_dir}/title_tf"
         if not os.path.isdir(root):
@@ -596,13 +631,12 @@ class SearchEngine:
         for t in (t for ts in by_bucket.values() for t in ts):
             out[t] = empty
         for b, ts in by_bucket.items():
-            d = f"{root}/bucket={b}"
-            if not os.path.isdir(d):
-                continue
-            tbl = pq.read_table(
-                d, columns=["term", "docid", "tf", "doc_len"],
-                filters=[("term", "in", ts)],
+            tbl = self._reader.lookup(
+                f"{root}/bucket={b}", "term", ts,
+                ["term", "docid", "tf", "doc_len"],
             )
+            if tbl is None:
+                continue
             terms_a = tbl.column("term").to_pylist()
             did = tbl.column("docid").to_numpy()
             tf = tbl.column("tf").to_numpy().astype(np.float64)
@@ -1835,9 +1869,11 @@ class SearchEngine:
         negation: bool = False, synonyms: bool = False,
         boost: str | None = None,
     ) -> list[tuple[int, float]]:
-        """Serve a query entirely on the DRIVER: pyarrow reads of the
-        terms' bucket directories (row-group pruned on the term-sorted
-        files), the same NumPy block-max kernel per doc-range shard, and
+        """Serve a query entirely on the DRIVER: footer-cached point
+        reads of the terms' lexicon and postings bucket directories
+        (``PointReader``: each directory's footers parsed once per
+        engine, only row groups whose term range can hold a query term
+        read), the same NumPy block-max kernel per doc-range shard, and
         a driver-side merge — zero Spark jobs, rank-identical to the
         distributed paths (pytest-enforced).
 
@@ -2430,40 +2466,14 @@ class SearchEngine:
         facet value counts under ``""``. ``top`` caps the returned
         categories (count desc, value asc — Lucene facet order): a
         high-cardinality field (source domains at web scale) must not
-        produce an unbounded response."""
+        produce an unbounded response. ``+must`` and ``title:``
+        clauses raise ValueError (facet_query_terms)."""
         import numpy as np
 
-        from .functions.analyzer import (
-            resolve_boolean_overlap, split_boolean,
-        )
-
-        excluded: list[str] = []
-        required: list[str] = []
-        if negation:
-            should_q, must_q, neg_q = split_boolean(query)
-            if neg_q.strip():
-                try:
-                    excluded = self.analyze(neg_q)
-                except EmptyQueryError:
-                    excluded = []
-            if must_q.strip():
-                try:
-                    required = self.analyze(must_q)
-                except EmptyQueryError:
-                    required = []
-            query = f"{should_q} {must_q}".strip()
-            if not query:
-                return {}
-        terms = (
-            self.expand_query_terms(query)
-            if "*" in (query or "")
-            else self.analyze(query)
-        )
-        terms, contradiction = resolve_boolean_overlap(
-            terms, required, excluded
-        )
-        if contradiction or not terms:
+        parsed = facet_query_terms(self, query, negation)
+        if parsed is None:
             return {}
+        terms, excluded = parsed
         by_salt, cats = self._facet_arrays(field)
         # same decode-by-salt helper the NOT path uses: docids
         # containing ANY of the given terms, grouped by shard
@@ -2507,12 +2517,13 @@ class SearchEngine:
         so only the <= k salt DIRECTORIES holding the requested ids are
         even listed (a 10^12-row table's remaining files never have
         their footers read); within them, docid-sorted files prune ROW
-        GROUPS via footer min/max stats. No Spark job and no full docs
-        scan: cost tracks k (<= 50), not corpus size. Falls back to a
-        filtered whole-table read on a legacy unpartitioned layout."""
+        GROUPS via footer min/max stats. Each directory is listed and
+        its footers parsed once per engine (``PointReader``), so a
+        lookup reads just the row groups that can hold its ids. No
+        Spark job and no full docs scan: cost tracks k (<= 50), not
+        corpus size. A legacy unpartitioned layout is read as one
+        directory."""
         import os
-
-        import pyarrow.parquet as pq
 
         if not docids:
             return []
@@ -2520,30 +2531,22 @@ class SearchEngine:
         if with_images:
             cols += ["images", "image_count"]
         base = f"{self.index_dir}/docs"
-        by_salt: dict[int, list[int]] = {}
-        for d in docids:
-            by_salt.setdefault(salt_of(d, self.salt_bits), []).append(
-                int(d)
-            )
+        by_dir: dict[str, list[int]] = {}
         legacy = not any(
             e.startswith("salt=") for e in os.listdir(base)
         )
-        if legacy:
-            return pq.read_table(
-                base,
-                columns=cols,
-                filters=[("docid", "in", [int(d) for d in docids])],
-            ).to_pylist()
+        for d in docids:
+            # an id from an empty shard has no directory -> not found
+            by_dir.setdefault(
+                base if legacy
+                else f"{base}/salt={salt_of(d, self.salt_bits)}",
+                [],
+            ).append(int(d))
         out: list[dict] = []
-        for s, ids in by_salt.items():
-            d = f"{base}/salt={s}"
-            if not os.path.isdir(d):
-                continue  # id from an empty shard -> simply not found
-            out.extend(
-                pq.read_table(
-                    d, columns=cols, filters=[("docid", "in", ids)]
-                ).to_pylist()
-            )
+        for d, ids in by_dir.items():
+            tbl = self._reader.lookup(d, "docid", ids, cols)
+            if tbl is not None:
+                out.extend(tbl.to_pylist())
         return out
 
     def search(

@@ -157,6 +157,15 @@ class _Handler(BaseHTTPRequestHandler):
         boost = (qs.get("boost") or [""])[0].strip().lower()
         kwargs = {}
         if boost:
+            if not hasattr(self.server.engine, "_static_rank_arrays"):
+                self._send(
+                    400,
+                    {
+                        "success": False, "result": [],
+                        "error": "boost is single-index serving only",
+                    },
+                )
+                return
             kwargs["boost"] = boost
         if facets:
             if not hasattr(self.server.engine, "facet_counts"):

@@ -160,26 +160,21 @@ def write_deletes_segment(
 
 
 def _overridden_doc_stats(
-    doc_stats_dir: str, tombs: np.ndarray, salt_bits: int
+    reader, doc_stats_dir: str, tombs: np.ndarray, salt_bits: int
 ) -> tuple[int, int]:
     """(count, total doc_len) of ``tombs`` docids present in a
     doc_stats table — directory-pruned per salt shard (the sorted array
-    slices contiguously because salt is the top docid bits). Falls back
-    to one filtered whole-table read on a legacy unpartitioned
-    layout."""
+    slices contiguously because salt is the top docid bits), then
+    row-group-pruned by the segment engine's footer-cached ``reader``
+    (pointread.PointReader). A legacy unpartitioned layout is read as
+    one directory."""
     import os
 
-    import pyarrow.parquet as pq
-
     def read(path, ids):
-        tbl = pq.read_table(
-            path,
-            columns=["docid", "doc_len"],
-            filters=[("docid", "in", ids)],
-        )
-        return len(tbl), (
-            int(tbl.column("doc_len").to_numpy().sum()) if len(tbl) else 0
-        )
+        tbl = reader.lookup(path, "docid", ids, ["docid", "doc_len"])
+        if tbl is None:
+            return 0, 0
+        return len(tbl), int(tbl.column("doc_len").to_numpy().sum())
 
     if not any(
         e.startswith("salt=") for e in os.listdir(doc_stats_dir)
@@ -197,10 +192,7 @@ def _overridden_doc_stats(
         hi = bounds[s + 1] if s + 1 < n_salts else tombs.size
         if hi <= lo:
             continue
-        d = f"{doc_stats_dir}/salt={s}"
-        if not os.path.isdir(d):
-            continue
-        c, tot = read(d, tombs[lo:hi].tolist())
+        c, tot = read(f"{doc_stats_dir}/salt={s}", tombs[lo:hi].tolist())
         n_rm += c
         len_rm += tot
     return n_rm, len_rm
@@ -291,7 +283,8 @@ class TieredEngine:
             tombs = self.tombstones[i]
             if tombs.size:
                 n_rm, len_rm = _overridden_doc_stats(
-                    f"{eng.index_dir}/doc_stats", tombs, eng.salt_bits
+                    eng._reader, f"{eng.index_dir}/doc_stats", tombs,
+                    eng.salt_bits,
                 )
                 n_live -= n_rm
                 overridden += n_rm
@@ -1836,39 +1829,14 @@ class TieredEngine:
         so the result equals the compacted index's facet_counts
         (pytest). Same bounded shape as the single-index head: match
         set from the live posting decodes, facet values from cached
-        per-segment doc-values."""
-        from .engine import EmptyQueryError
-        from .functions.analyzer import (
-            resolve_boolean_overlap, split_boolean,
-        )
+        per-segment doc-values. ``+must`` and ``title:`` clauses raise
+        ValueError (engine.facet_query_terms)."""
+        from .engine import facet_query_terms
 
-        excluded: list[str] = []
-        required: list[str] = []
-        if negation:
-            should_q, must_q, neg_q = split_boolean(query)
-            if neg_q.strip():
-                try:
-                    excluded = self.analyze(neg_q)
-                except EmptyQueryError:
-                    excluded = []
-            if must_q.strip():
-                try:
-                    required = self.analyze(must_q)
-                except EmptyQueryError:
-                    required = []
-            query = f"{should_q} {must_q}".strip()
-            if not query:
-                return {}
-        terms = (
-            self.expand_query_terms(query)
-            if "*" in (query or "")
-            else self.analyze(query)
-        )
-        terms, contradiction = resolve_boolean_overlap(
-            terms, required, excluded
-        )
-        if contradiction or not terms:
+        parsed = facet_query_terms(self, query, negation)
+        if parsed is None:
             return {}
+        terms, excluded = parsed
         segs, cats = self._facet_arrays(field)
         live = self._live_term_postings_many(
             list(dict.fromkeys(terms + excluded))

@@ -10,6 +10,8 @@ import urllib.request
 import pytest
 from pyspark.sql import functions as F
 
+from wiki_search_engine_spark import query
+
 
 def test_weight1_is_plain_bm25(engine, fixture_queries):
     """tf' = tf + (w-1)*tf_title at w=1 collapses to plain BM25 for
@@ -17,9 +19,10 @@ def test_weight1_is_plain_bm25(engine, fixture_queries):
     checked = 0
     for q in list(fixture_queries)[:4]:
         plain = engine.search_local(q, k=10)
-        got = engine._search_local_bm25f(
-            engine.analyze(q), 10, None, title_weight=1.0
-        )
+        got = query.top_k(*query.accumulate(
+            engine, query.Clauses(terms=engine.analyze(q)), "bm25f",
+            title_weight=1.0,
+        ), 10)
         assert [d for d, _ in got] == [d for d, _ in plain], q
         for (_, a), (_, b) in zip(got, plain):
             assert math.isclose(a, b, rel_tol=1e-12), q
@@ -185,13 +188,7 @@ def test_bm25f_composes_with_negation(titled_engine):
     got = eng.search_local(
         "alpha discussion -general", k=10, mode="bm25f", negation=True
     )
-    exc = {
-        int(d)
-        for arr in eng._excluded_docids_by_salt(
-            eng.analyze("general")
-        ).values()
-        for d in arr
-    }
+    exc = set(query.not_docids(eng, eng.analyze("general")).tolist())
     base = eng.search_local("alpha discussion", k=eng.n, mode="bm25f")
     assert got == [(d, s) for d, s in base if d not in exc][:10]
 

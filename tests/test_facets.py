@@ -232,43 +232,51 @@ def test_facet_top_caps_categories(engine):
         srv.shutdown()
 
 
-def test_facets_reject_must_and_title_clauses(spark, engine, index_dir):
-    """Under negation, +must and title: clauses gate the results but
-    not the facet match set: facets refuse the combination (a clean
-    400 over HTTP) on both engines, while a bare/-NOT query still
-    counts."""
+def test_facets_count_must_and_title_match_sets(
+    spark, engine, index_dir, corpus_rows, docid_map
+):
+    """Under negation, +must and title: clauses gate the results, and
+    facets count exactly that match set: each facet total equals a
+    brute-force count over search_local(k=n), on both engines and over
+    HTTP."""
+    from collections import Counter
+
     from wiki_search_engine_spark.server import start_server
     from wiki_search_engine_spark.sources.synth import vocabulary
     from wiki_search_engine_spark.tiered import TieredEngine
 
     words = vocabulary(42)[0]
-    bad = [
+    lang = {docid_map[r["url"]]: r["lang"] for r in corpus_rows}
+    queries = [
         f"{words[3]} +{words[50]}",
-        f"title:{words[3]} {words[50]}",
-        f"{words[3]} -title:{words[50]}",
+        f"+{words[3]} +{words[50]} -{words[20]}",
+        f"title:doc {words[50]}",
+        f"+title:doc {words[3]}",
+        f"{words[3]} {words[50]} -title:doc",
     ]
     teng = TieredEngine(spark, [index_dir])
-    for eng in (engine, teng):
-        for q in bad:
-            with pytest.raises(ValueError, match="facets"):
-                eng.facet_counts(q, field="lang", negation=True)
-        # without the boolean flag the same text is a bag query
-        assert eng.facet_counts(bad[0], field="lang") == (
-            engine.facet_counts(bad[0], field="lang")
-        )
-        assert eng.facet_counts(
-            f"{words[3]} -{words[20]}", field="lang", negation=True
-        )
+    expected = {}
+    for q in queries:
+        hits = engine.search_local(q, k=engine.n, negation=True)
+        expected[q] = dict(Counter(lang[d] for d, _s in hits))
+        for eng in (engine, teng):
+            assert eng.facet_counts(q, field="lang", negation=True) == (
+                expected[q]
+            ), q
+    # +must narrows the set below the OR reading of the same words
+    assert sum(expected[queries[0]].values()) < sum(
+        engine.facet_counts(queries[0], field="lang").values()
+    )
     srv = start_server(engine, port=0, path_mode="local")
     try:
         port = srv.server_address[1]
-        url = (
-            f"http://127.0.0.1:{port}/query-stem?query="
-            f"{urllib.parse.quote(bad[0])}&negation=true&facets=lang"
-        )
-        with pytest.raises(urllib.error.HTTPError) as ei:
-            urllib.request.urlopen(url, timeout=30)
-        assert ei.value.code == 400
-        assert "facets" in json.load(ei.value)["error"]
+        for q in queries[:2]:
+            url = (
+                f"http://127.0.0.1:{port}/query-stem?query="
+                f"{urllib.parse.quote(q)}&negation=true&facets=lang"
+            )
+            with urllib.request.urlopen(url, timeout=30) as r:
+                assert r.status == 200
+                assert json.load(r)["facets"]["lang"] == expected[q]
     finally:
         srv.shutdown()

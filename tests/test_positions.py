@@ -5,6 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from wiki_search_engine_spark import query
 from wiki_search_engine_spark.functions.analyzer import full_tokens
 from wiki_search_engine_spark.operators.phrase import (
     indexed_phrase_occurrences,
@@ -646,13 +647,7 @@ def test_mixed_negation_compose(spark, pos_index):
         q, option_name="bm25", k=10, negation=True
     )
     got = [int(x["file_id"]) for x in resp["textResult"]]
-    exc = {
-        int(d)
-        for a in eng._excluded_docids_by_salt(
-            eng.analyze(neg)
-        ).values()
-        for d in a
-    }
+    exc = set(query.not_docids(eng, eng.analyze(neg)).tolist())
     base = eng.search_mixed(f'"{phrase}"', k=eng.n, mode="bm25")
     exp = [d for d, _s in base if d not in exc][:10]
     assert got == exp

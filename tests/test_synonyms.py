@@ -7,6 +7,7 @@ import urllib.request
 
 import pytest
 
+from wiki_search_engine_spark import query
 from wiki_search_engine_spark.sources.synth import vocabulary
 
 
@@ -109,13 +110,7 @@ def test_synonyms_compose_with_negation(engine, syn_words):
         got = engine.search_local(
             f"{a} -{c}", k=10, synonyms=True, negation=True
         )
-        exc = {
-            int(d)
-            for arr in engine._excluded_docids_by_salt(
-                engine.analyze(c)
-            ).values()
-            for d in arr
-        }
+        exc = set(query.not_docids(engine, engine.analyze(c)).tolist())
         assert all(d not in exc for d, _ in got)
         base = engine.search_local(a, k=engine.n, synonyms=True)
         assert got == [(d, s) for d, s in base if d not in exc][:10]

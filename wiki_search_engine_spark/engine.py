@@ -16,20 +16,18 @@ orderBy(score desc, docid asc).limit(k) -> broadcast hydration join.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import query as query_path
 from .functions.analyzer import analyze_query
 from .operators.postings import DEFAULT_BUCKETS, decode_postings_df, term_bucket
 from .operators.scoring import score_exhaustive
 from .operators.wand import search_topk
 from .plans.build import build_index
 from .pointread import PointReader
-
-
-class EmptyQueryError(ValueError):
-    """Reference returns HTTP 400 {success:false, error:'Empty query'}
-    for blank queries (backend/controllers/queryController.js:21-25)."""
+from .query import EmptyQueryError
 
 
 def salt_of(docid: int, salt_bits: int) -> int:
@@ -80,188 +78,6 @@ def resolve_index_dir(path: str, snapshot: str | None = None) -> str:
             "(streaming.ingest.enroll_index_root)"
         )
     return path
-
-
-def sys_snapshot() -> dict:
-    """Driver-process memory snapshot mirroring the reference's
-    profiler sysSnapshot shape (backend/utils/profiler.js:20-29):
-    rss_mb / heapUsed_mb / heapTotal_mb / eventLoopDelay_ms. Values come
-    from /proc/self/status (VmRSS / VmData / VmSize); on platforms
-    without procfs the fields degrade to 0.0 rather than erroring a
-    query response."""
-    vals = {"VmRSS": 0.0, "VmData": 0.0, "VmSize": 0.0}
-    try:
-        with open("/proc/self/status") as f:
-            for line in f:
-                key = line.split(":")[0]
-                if key in vals:
-                    vals[key] = float(line.split()[1]) / 1024.0  # kB->MB
-    except OSError:
-        pass
-    return {
-        "rss_mb": round(vals["VmRSS"], 1),
-        "heapUsed_mb": round(vals["VmData"], 1),
-        "heapTotal_mb": round(vals["VmSize"], 1),
-        "eventLoopDelay_ms": 0,
-    }
-
-
-def assemble_reference_response(
-    query: str,
-    option_name: str,
-    analyze,
-    get_ids,
-    lookup_docs,
-    page: int | None = None,
-    per_page: int = 10,
-    decorate_snippet=None,
-) -> dict:
-    """The ONE implementation of the reference HTTP response shape
-    (queryController.js:11-59), shared by SearchEngine and TieredEngine
-    (a second copy of the span/assembly machinery drifted once already).
-    ``get_ids(mode) -> [(docid, score), ...]`` supplies scoring;
-    ``lookup_docs(docids) -> rows`` supplies hydration; spans and the
-    sysSnapshot follow utils/profiler.js.
-
-    ``page`` enables SERVER-side pagination — the reference does it in
-    the client (react-app/src/App.js:145-147: startIndex =
-    (currentPage-1)*resultsPerPage, slice, resultsPerPage=10) over the
-    full top-k it downloaded; passing page replays that exact slice
-    over BOTH textResult and imageResult here and adds totalResults /
-    page / resultsPerPage so a pager can render without shipping all k
-    hydrated rows per request. page=None (default) keeps the reference
-    API byte-shape."""
-    import time
-
-    mode = (option_name or "tfidf").lower()
-    if mode not in ("tfidf", "bm25", "bm25f"):
-        mode = "tfidf"
-    t_all = time.time()
-    measures = []
-
-    def span(name, fn):
-        t0 = time.time()
-        out = fn()
-        measures.append(
-            {"name": name,
-             "duration_ms": round(1000 * (time.time() - t0), 3)}
-        )
-        return out
-
-    try:
-        span(
-            "validate_input",
-            lambda: (_ for _ in ()).throw(EmptyQueryError("Empty query"))
-            if not query or not query.strip()
-            else None,
-        )
-        terms = span("stem_query", lambda: analyze(query))
-    except EmptyQueryError:
-        return {"success": False, "result": [], "error": "Empty query"}
-    ids = span("get_documents", lambda: get_ids(mode))
-    id_rows = [(int(d), float(s)) for d, s in ids]
-    score_map = dict(id_rows)
-    # result hydration is a point lookup over the k result ids — never a
-    # second search and never a docs-table scan/join
-    docs = span(
-        "fetch_results",
-        lambda: sorted(
-            lookup_docs([d for d, _ in id_rows]),
-            key=lambda r: (-score_map[r["docid"]], r["docid"]),
-        ),
-    )
-    text_result = [
-        {
-            "docId": r["title"],
-            "chunkedBody": (
-                r["snippet"]
-                if decorate_snippet is None
-                else decorate_snippet(r["snippet"])
-            ),
-            "url": r["url"],
-            "file_id": str(r["docid"]),
-            "score": score_map[r["docid"]],
-        }
-        for r in docs
-    ]
-    image_result = span(
-        "get_image_filenames",
-        lambda: [
-            img["image_id"]
-            for r in docs
-            for img in (r.get("images") or [])
-        ],
-    )
-    measures.append(
-        {"name": "total_request",
-         "duration_ms": round(1000 * (time.time() - t_all), 3)}
-    )
-    resp = {
-        "imageResult": image_result,
-        "textResult": text_result,
-        "searchTime": round(time.time() - t_all, 3),
-        "profile": {
-            "measures": measures,
-            "sysSnapshot": sys_snapshot(),
-        },
-        "query_terms": terms,
-    }
-    if page is not None:
-        # App.js:145-147 verbatim: slice(start, start+per) on whichever
-        # list the client is viewing — both are sliced consistently so
-        # either view paginates; hydration above already happened over
-        # all k ids, matching what the client-side scheme fetched
-        page = max(1, int(page))
-        per_page = max(1, int(per_page))
-        start = (page - 1) * per_page
-        resp["totalResults"] = {
-            "text": len(text_result), "image": len(image_result),
-        }
-        resp["page"] = page
-        resp["resultsPerPage"] = per_page
-        resp["textResult"] = text_result[start:start + per_page]
-        resp["imageResult"] = image_result[start:start + per_page]
-    return resp
-
-
-def facet_query_terms(
-    eng, query: str, negation: bool
-) -> tuple[list[str], list[str]] | None:
-    """(positive terms, excluded terms) of the match set facet counts
-    run over — every doc holding any positive term and no excluded one
-    — or None when that set is empty. Shared by SearchEngine and
-    TieredEngine. Under ``negation`` a ``+must`` or ``title:`` clause
-    would gate the results but not this OR-of-terms set, so the counts
-    would describe other docs than the page returns: that combination
-    raises ValueError (HTTP 400) instead."""
-    from .functions.analyzer import (
-        resolve_boolean_overlap, split_boolean, split_field_terms,
-    )
-
-    excluded: list[str] = []
-    if negation:
-        should_q, must_q, neg_q = split_boolean(query)
-        if must_q.strip() or split_field_terms(
-            f"{should_q} {neg_q}"
-        )[1]:
-            raise ValueError(
-                "facets do not compose with +must or title: clauses"
-            )
-        if neg_q.strip():
-            try:
-                excluded = eng.analyze(neg_q)
-            except EmptyQueryError:
-                excluded = []
-        query = should_q.strip()
-        if not query:
-            return None
-    terms = (
-        eng.expand_query_terms(query)
-        if "*" in (query or "")
-        else eng.analyze(query)
-    )
-    terms, _ = resolve_boolean_overlap(terms, None, excluded)
-    return (terms, excluded) if terms else None
 
 
 class SearchEngine:
@@ -331,6 +147,10 @@ class SearchEngine:
         self.n = int(stats["N"])
         self.avgdl = float(stats["avgdl"])
         self.total_length = int(stats["total_length"])
+        # the segment set the query path runs over (query.py): this
+        # index alone, nothing overridden
+        self.segments = [(self, np.empty(0, dtype=np.int64))]
+        self.overridden = 0
         import threading
         from collections import OrderedDict
 
@@ -598,19 +418,9 @@ class SearchEngine:
         """term -> (docids, title_tfs, body_doc_lens) numpy arrays from
         the title_tf sidecar — pyarrow over the terms' bucket
         directories (term-sorted row groups), no Spark job, the same
-        footer-cached point read as term_df. Missing sidecar raises with
-        the titleindex remedy."""
-        import os
-
-        import numpy as np
-
+        footer-cached point read as term_df. The caller checks the
+        sidecar exists (query.title_rows raises the titleindex remedy)."""
         root = f"{self.index_dir}/title_tf"
-        if not os.path.isdir(root):
-            raise FileNotFoundError(
-                f"{root} missing — BM25F needs the title-field sidecar; "
-                "run engine.build_title_tf() (CLI: titleindex) or "
-                "rebuild the index"
-            )
         cache = getattr(self, "_title_cache", None)
         if cache is None:
             cache = self._title_cache = {}
@@ -673,9 +483,9 @@ class SearchEngine:
         root = f"{self.index_dir}/static_rank"
         if not os.path.isdir(root):
             raise FileNotFoundError(
-                f"{root} missing — boost='static' needs the PageRank "
-                "sidecar; rebuild with pagerank_iters=N (CLI: build "
-                "--pagerank N)"
+                f"{root} missing — boost='static' is single-index serving "
+                "only and needs that index's PageRank sidecar; rebuild "
+                "with pagerank_iters=N (CLI: build --pagerank N)"
             )
         tbl = self._side_dataset("static_rank").to_table(
             columns=["docid", "rank"]
@@ -685,219 +495,6 @@ class SearchEngine:
         order = np.argsort(d, kind="stable")
         self._rank_cache = (d[order], r[order])
         return self._rank_cache
-
-    def _search_local_boosted(
-        self, terms: list[str], k: int, mode: str,
-        exc_by_salt: dict | None = None,
-    ) -> list[tuple[int, float]]:
-        """Driver-side retrieval with the static-authority boost:
-        full-decode accumulate (block-max pruning would be unsound —
-        the boost can lift a doc past an unboosted upper bound), then
-        score += W * ln(1 + N * rank) per candidate, NOT exclusion,
-        top-k. The distributed twin is the bm25_static_rank entry."""
-        import numpy as np
-
-        from . import B, K1
-        from .operators.codec import decode_posting_list
-        from .oracle_py.oracle import bm25_idf, tfidf_idf
-
-        lists = self._cached_term_lists(terms)
-        all_d, all_s = [], []
-        for t in dict.fromkeys(terms):
-            df, salted = lists.get(t, (0, []))
-            if df <= 0:
-                continue
-            ds, tfs, dls = [], [], []
-            for _salt, blocks in salted:
-                d_, tf_, dl_ = decode_posting_list(
-                    [
-                        b if isinstance(b, dict) else b.asDict()
-                        for b in blocks
-                    ]
-                )
-                ds.append(d_)
-                tfs.append(tf_)
-                dls.append(dl_)
-            d = np.concatenate(ds)
-            tf = np.concatenate(tfs).astype(np.float64)
-            dl = np.concatenate(dls).astype(np.float64)
-            idf = (
-                bm25_idf(self.n, df)
-                if mode == "bm25"
-                else tfidf_idf(self.n, df)
-            )
-            if mode == "bm25":
-                s = (
-                    idf * tf * (K1 + 1.0)
-                    / (tf + K1 * (1.0 - B + B * dl / self.avgdl))
-                )
-            else:
-                s = tf * idf
-            all_d.append(d)
-            all_s.append(s)
-        if not all_d:
-            return []
-        d = np.concatenate(all_d)
-        s = np.concatenate(all_s)
-        uniq, inv = np.unique(d, return_inverse=True)
-        acc = np.zeros(uniq.size)
-        np.add.at(acc, inv, s)
-        rd, rr = self._static_rank_arrays()
-        if rd.size:
-            pos = np.searchsorted(rd, uniq)
-            safe = np.minimum(pos, rd.size - 1)
-            hit = rd[safe] == uniq
-            boost = np.zeros(uniq.size)
-            boost[hit] = self.STATIC_BOOST_WEIGHT * np.log1p(
-                float(self.n) * rr[safe[hit]]
-            )
-            acc = acc + boost
-        if exc_by_salt:
-            exc = np.concatenate(list(exc_by_salt.values()))
-            keep = ~np.isin(uniq, exc)
-            uniq, acc = uniq[keep], acc[keep]
-        idx = np.lexsort((uniq, -acc))[: min(k, uniq.size)]
-        return [(int(uniq[i]), float(acc[i])) for i in idx]
-
-    def _parse_field_clauses(
-        self, should_q: str, must_q: str, neg_q: str
-    ) -> tuple:
-        """Extract ``title:``-scoped terms from already-split boolean
-        clause texts. Returns (plain_should, plain_must, plain_neg,
-        t_should, t_must, t_not, contradiction) — field tokens run
-        through the index analyzer (a multi-word source token can
-        yield several field terms) and the Lucene overlap rule applies
-        within the title namespace (+title:t -title:t contradicts;
-        SHOULD title:t -title:t drops the SHOULD occurrence)."""
-        from .functions.analyzer import (
-            resolve_boolean_overlap, split_field_terms,
-        )
-
-        should_q, f_s = split_field_terms(should_q)
-        must_q, f_m = split_field_terms(must_q)
-        neg_q, f_n = split_field_terms(neg_q)
-
-        def _an(toks):
-            out = []
-            for t in toks:
-                if "*" in t:
-                    raise ValueError(
-                        "wildcards are not supported in field-scoped "
-                        "terms"
-                    )
-                try:
-                    out.extend(self.analyze(t))
-                except EmptyQueryError:
-                    pass
-            return list(dict.fromkeys(out))
-
-        t_s, t_m, t_n = _an(f_s), _an(f_m), _an(f_n)
-        pos, contra = resolve_boolean_overlap(
-            list(dict.fromkeys(t_s + t_m)), t_m, t_n
-        )
-        t_s = [t for t in t_s if t in pos and t not in t_m]
-        return should_q, must_q, neg_q, t_s, t_m, t_n, contra
-
-    def _search_local_fielded(
-        self, bag_terms: list[str], bag_required: list[str],
-        t_should: list[str], t_must: list[str], t_not: list[str],
-        bag_excluded: list[str], k: int, mode: str,
-    ) -> list[tuple[int, float]]:
-        """Driver-side Lucene FIELD-SCOPED scoring: ``title:term``
-        clauses score on the TITLE field — tf = title occurrences,
-        df = count of docs whose title contains the term (the live
-        title_tf row count), dl = the doc's BODY length norm (the
-        sidecar row shape) — while bag clauses score exactly as plain
-        BM25/TF-IDF. ``+title:t`` gates membership on title
-        containment, ``-title:t`` excludes on it. Rank-identical to
-        the tagged-relation distributed form (pytest)."""
-        import numpy as np
-
-        from . import B, K1
-        from .operators.codec import decode_posting_list
-        from .oracle_py.oracle import bm25_idf, tfidf_idf
-
-        def _score(tf, dl, df):
-            idf = (
-                bm25_idf(self.n, df)
-                if mode == "bm25"
-                else tfidf_idf(self.n, df)
-            )
-            if mode == "bm25":
-                return (
-                    idf * tf * (K1 + 1.0)
-                    / (tf + K1 * (1.0 - B + B * dl / self.avgdl))
-                )
-            return tf * idf
-
-        lists = (
-            self._cached_term_lists(bag_terms) if bag_terms else {}
-        )
-        trows = self._title_rows(
-            list(dict.fromkeys(t_should + t_must + t_not))
-        )
-        all_d, all_s, req_sets = [], [], []
-        for t in dict.fromkeys(bag_terms):
-            df, salted = lists.get(t, (0, []))
-            if df <= 0:
-                if t in bag_required:
-                    return []
-                continue
-            ds, tfs, dls = [], [], []
-            for _salt, blocks in salted:
-                d_, tf_, dl_ = decode_posting_list(
-                    [
-                        b if isinstance(b, dict) else b.asDict()
-                        for b in blocks
-                    ]
-                )
-                ds.append(d_)
-                tfs.append(tf_)
-                dls.append(dl_)
-            d = np.concatenate(ds)
-            tf = np.concatenate(tfs).astype(np.float64)
-            dl = np.concatenate(dls).astype(np.float64)
-            all_d.append(d)
-            all_s.append(_score(tf, dl, df))
-            if t in bag_required:
-                req_sets.append(np.unique(d))
-        for t in dict.fromkeys(t_should + t_must):
-            td, ttf, tdl = trows[t]
-            if not td.size:
-                if t in t_must:
-                    return []  # absent required title term
-                continue
-            all_d.append(td)
-            all_s.append(_score(ttf, tdl, int(td.size)))
-            if t in t_must:
-                req_sets.append(td)  # sorted-unique by construction
-        if not all_d:
-            return []
-        d = np.concatenate(all_d)
-        s = np.concatenate(all_s)
-        uniq, inv = np.unique(d, return_inverse=True)
-        acc = np.zeros(uniq.size)
-        np.add.at(acc, inv, s)
-        for rs in req_sets:
-            keep = np.isin(uniq, rs)
-            uniq, acc = uniq[keep], acc[keep]
-            if not uniq.size:
-                return []
-        exc_arrays = []
-        if bag_excluded:
-            exc_arrays.extend(
-                self._excluded_docids_by_salt(bag_excluded).values()
-            )
-        for t in dict.fromkeys(t_not):
-            td, _ttf, _tdl = trows[t]
-            if td.size:
-                exc_arrays.append(td)
-        if exc_arrays:
-            exc = np.unique(np.concatenate(exc_arrays))
-            keep = ~np.isin(uniq, exc)
-            uniq, acc = uniq[keep], acc[keep]
-        idx = np.lexsort((uniq, -acc))[: min(k, uniq.size)]
-        return [(int(uniq[i]), float(acc[i])) for i in idx]
 
     def _search_ids_fielded(
         self, bag_terms: list[str], bag_required: list[str],
@@ -911,7 +508,8 @@ class SearchEngine:
         then the standard exhaustive scorer runs once — its live df
         recompute, MUST count gate and NOT anti-join all operate on
         the tagged names, so field semantics need no new aggregation
-        machinery. Rank-identical to _search_local_fielded (pytest)."""
+        machinery. Rank-identical to the driver-local title: scoring
+        (query.accumulate; pytest)."""
         import os as _os
 
         from .operators.postings import term_bucket
@@ -965,99 +563,6 @@ class SearchEngine:
             exclude_terms=(bag_excluded + tag(t_not)) or None,
             required_terms=(bag_required + tag(t_must)) or None,
         )
-
-    def _search_local_bm25f(
-        self, terms: list[str], k: int, exc_by_salt: dict | None = None,
-        title_weight: float | None = None,
-    ) -> list[tuple[int, float]]:
-        """Driver-side BM25F: per term, body postings merge with the
-        title sidecar rows — tf' = tf + (w-1)*tf_title, title-only
-        matches normalize against their stored BODY length, df = docs
-        with tf' > 0 (== body df at w == 1, preserving the plain-BM25
-        identity). Exclusion (NOT) applies to body-posting membership
-        after accumulation, like the synonyms kernel. Rank-identical
-        to the distributed operator (pytest)."""
-        import numpy as np
-
-        from . import B, K1
-        from .operators.codec import decode_posting_list
-        from .oracle_py.oracle import bm25_idf
-
-        w = (
-            self.DEFAULT_TITLE_WEIGHT
-            if title_weight is None
-            else float(title_weight)
-        )
-        lists = self._cached_term_lists(terms)
-        trows = self._title_rows(terms)
-        all_d, all_s = [], []
-        for t in dict.fromkeys(terms):
-            _df, salted = lists.get(t, (0, []))
-            ds, tfs, dls = [], [], []
-            for _salt, blocks in salted:
-                d_, tf_, dl_ = decode_posting_list(
-                    [
-                        b if isinstance(b, dict) else b.asDict()
-                        for b in blocks
-                    ]
-                )
-                ds.append(d_)
-                tfs.append(tf_)
-                dls.append(dl_)
-            if ds:
-                d = np.concatenate(ds)
-                tf = np.concatenate(tfs).astype(np.float64)
-                dl = np.concatenate(dls).astype(np.float64)
-                order = np.argsort(d, kind="stable")
-                d, tf, dl = d[order], tf[order], dl[order]
-            else:
-                d = np.empty(0, np.int64)
-                tf = dl = np.empty(0, np.float64)
-            td, ttf, tdl = trows.get(
-                t,
-                (
-                    np.empty(0, np.int64),
-                    np.empty(0, np.float64),
-                    np.empty(0, np.float64),
-                ),
-            )
-            if w != 1.0 and td.size:
-                pos = np.searchsorted(d, td)
-                safe = np.minimum(pos, max(d.size - 1, 0))
-                in_body = (
-                    (pos < d.size) & (d[safe] == td)
-                    if d.size
-                    else np.zeros(td.size, bool)
-                )
-                tf = tf.copy()
-                tf[pos[in_body]] += (w - 1.0) * ttf[in_body]
-                d = np.concatenate([d, td[~in_body]])
-                tf = np.concatenate([tf, (w - 1.0) * ttf[~in_body]])
-                dl = np.concatenate([dl, tdl[~in_body]])
-            keep = tf > 0
-            d, tf, dl = d[keep], tf[keep], dl[keep]
-            if not d.size:
-                continue
-            idf = bm25_idf(self.n, int(d.size))
-            s = (
-                idf * tf * (K1 + 1.0)
-                / (tf + K1 * (1.0 - B + B * dl / self.avgdl))
-            )
-            all_d.append(d)
-            all_s.append(s)
-        if not all_d:
-            return []
-        d = np.concatenate(all_d)
-        s = np.concatenate(all_s)
-        uniq, inv = np.unique(d, return_inverse=True)
-        scores = np.zeros(uniq.size)
-        np.add.at(scores, inv, s)
-        if exc_by_salt:
-            exc = np.concatenate(list(exc_by_salt.values()))
-            keep = ~np.isin(uniq, exc)
-            uniq, scores = uniq[keep], scores[keep]
-        idx = np.lexsort((uniq, -scores))[: min(k, uniq.size)]
-        return [(int(uniq[i]), float(scores[i])) for i in idx]
 
     def build_lexicon_rev(self, partitions: int | None = None) -> None:
         """Materialize the REVERSED-term lexicon sidecar under
@@ -1332,38 +837,13 @@ class SearchEngine:
     def search_phrase(
         self, phrase: str, k: int = 50, slop: int = 0
     ) -> list[tuple[int, float, int]]:
-        """Exact-phrase top-k on the DRIVER from the positional sidecar
-        (build with positions=True): ONE threaded pyarrow dataset read
-        (bucket partition pruning + term In pushdown over term-sorted
-        row groups), NumPy adjacency per candidate doc, BM25
-        pseudo-term scoring against the stats singleton — zero Spark
-        jobs, zero corpus access. Returns [(docid, score, phrase_tf)]
-        by (score desc, docid asc); [] when any phrase term is absent.
-        Rank/value identity with the corpus-scan operator
-        (operators/phrase.py) is pytest-enforced."""
-        import math
-
-        from . import B, K1
-
-        m = self._phrase_matches(phrase, slop=slop)
-        if m is None:
-            return []
-        docs, dls, tfs = m
-        dfm = int(docs.size)
-        idf = math.log((self.n - dfm + 0.5) / (dfm + 0.5) + 1.0)
-        scored = [
-            (
-                int(doc),
-                idf * tf * (K1 + 1.0)
-                / (tf + K1 * (1.0 - B + B * dl / self.avgdl)),
-                int(tf),
-            )
-            for doc, dl, tf in zip(
-                docs.tolist(), dls.tolist(), tfs.tolist()
-            )
-        ]
-        scored.sort(key=lambda r: (-r[1], r[0]))
-        return scored[:k]
+        """Exact-phrase (or ``slop`` window) top-k on the driver from the
+        positional sidecars (build with positions=True):
+        [(docid, score, phrase_tf)] by (score desc, docid asc), [] when
+        a phrase term is absent — query.search_phrase. Rank/value
+        identity with the corpus-scan operator (operators/phrase.py) is
+        pytest-enforced."""
+        return query_path.search_phrase(self, phrase, k, slop)
 
     def _phrase_matches(self, phrase: str, slop: int = 0):
         """Shared phrase machinery (search_phrase / search_mixed):
@@ -1606,106 +1086,11 @@ class SearchEngine:
     def search_mixed(
         self, query: str, k: int = 50, mode: str = "bm25",
     ) -> list[tuple[int, float]]:
-        """Mixed quoted-phrase query on the DRIVER: every
-        double-quoted span is an exact-phrase REQUIREMENT (conjunctive
-        filter, scored as a pseudo-term via the positional sidecar);
-        the remaining bag terms add their ordinary contributions (OR,
-        never expanding the candidate set). A quote-free query
-        delegates to search_local. Zero Spark jobs; rank/value
-        identity with operators/phrase.py mixed_bm25 is
-        pytest-enforced."""
-        import math
-
-        import numpy as np
-
-        from . import B, K1
-        from .operators.codec import decode_posting_list
-        from .operators.phrase import parse_query
-        from .oracle_py.oracle import bm25_idf, tfidf_idf
-
-        bag_text, phrases = parse_query(query)
-        if not phrases:
-            return self.search_local(query, k=k, mode=mode)
-        cand = dls = None
-        pscore = None
-        for ptext, pslop in phrases:
-            m = self._phrase_matches(ptext, slop=pslop)
-            if m is None:
-                return []
-            docs, pdls, ptfs = m
-            dfm = int(docs.size)
-            idf = (
-                math.log((self.n - dfm + 0.5) / (dfm + 0.5) + 1.0)
-                if mode == "bm25"
-                else math.log(self.n / dfm)
-            )
-            tfd = ptfs.astype(np.float64)
-            if mode == "bm25":
-                ps = idf * tfd * (K1 + 1.0) / (
-                    tfd
-                    + K1
-                    * (1.0 - B + B * pdls.astype(np.float64) / self.avgdl)
-                )
-            else:
-                ps = tfd * idf
-            if cand is None:
-                cand, dls, pscore = docs, pdls, ps
-            else:
-                keep = np.isin(cand, docs, assume_unique=True)
-                cand, dls, pscore = cand[keep], dls[keep], pscore[keep]
-                if cand.size == 0:
-                    return []
-                pscore = pscore + ps[
-                    np.isin(docs, cand, assume_unique=True)
-                ]
-        bag_terms = self.analyze(bag_text) if bag_text else []
-        if bag_terms:
-            lists = self._cached_term_lists(bag_terms)
-            for t in dict.fromkeys(bag_terms):
-                df, salted = lists.get(t, (0, []))
-                if df <= 0:
-                    continue
-                parts = [
-                    decode_posting_list(
-                        [
-                            b if isinstance(b, dict) else b.asDict()
-                            for b in blocks
-                        ]
-                    )
-                    for _salt, blocks in salted
-                ]
-                d = np.concatenate([p[0] for p in parts])
-                tf = np.concatenate([p[1] for p in parts])
-                dl = np.concatenate([p[2] for p in parts])
-                order = np.argsort(d)
-                d, tf, dl = d[order], tf[order], dl[order]
-                pos = np.searchsorted(d, cand)
-                pos = np.minimum(pos, max(d.size - 1, 0))
-                sel = (d.size > 0) & (d[pos] == cand)
-                if not sel.any():
-                    continue
-                idf = (
-                    bm25_idf(self.n, int(df))
-                    if mode == "bm25"
-                    else tfidf_idf(self.n, int(df))
-                )
-                tfd = tf[pos[sel]].astype(np.float64)
-                if mode == "bm25":
-                    contrib = idf * tfd * (K1 + 1.0) / (
-                        tfd
-                        + K1
-                        * (
-                            1.0 - B
-                            + B * dl[pos[sel]].astype(np.float64)
-                            / self.avgdl
-                        )
-                    )
-                else:
-                    contrib = tfd * idf
-                pscore = pscore.copy()
-                pscore[sel] += contrib
-        idx = np.lexsort((cand, -pscore))[: min(k, cand.size)]
-        return [(int(cand[i]), float(pscore[i])) for i in idx]
+        """Mixed quoted-phrase query on the driver (query.search_mixed):
+        quoted spans are conjunctive phrase filters scored as
+        pseudo-terms, bag terms add their contributions. Rank/value
+        identity with operators/phrase.py mixed_bm25 is pytest-enforced."""
+        return query_path.search_mixed(self, query, k, mode)
 
     def set_synonyms(self, groups: list[list[str]]) -> None:
         """Write the query-time synonym sidecar (``synonyms.json``:
@@ -1754,127 +1139,15 @@ class SearchEngine:
         self._syn_map = out
         return out
 
-    def _search_local_synonyms(
-        self, terms: list[str], k: int, mode: str,
-        exc_by_salt: dict | None = None,
-    ) -> list[tuple[int, float]]:
-        """Driver-side SynonymQuery scoring: each query term's group
-        (itself + sidecar synonyms) scores as ONE pseudo-term — per-doc
-        tf summed over members, df = docs containing ANY member (the
-        true disjunction df; operators/scoring.py score_synonyms
-        docstring has the Lucene comparison). Decoded-array form like
-        the AND path; rank-identical to the distributed operator
-        (pytest)."""
-        import numpy as np
-
-        from . import B, K1
-        from .operators.codec import decode_posting_list
-        from .oracle_py.oracle import bm25_idf, tfidf_idf
-
-        syn = self._load_synonyms()
-        groups = []
-        for t in dict.fromkeys(terms):
-            groups.append(list(dict.fromkeys([t] + syn.get(t, []))))
-        need = sorted({g for grp in groups for g in grp})
-        lists = self._cached_term_lists(need)
-        all_d, all_s = [], []
-        for grp in groups:
-            ds, tfs, dls = [], [], []
-            for g in grp:
-                df, salted = lists.get(g, (0, []))
-                if df <= 0:
-                    continue
-                for _salt, blocks in salted:
-                    d, tf, dl = decode_posting_list(
-                        [
-                            b if isinstance(b, dict) else b.asDict()
-                            for b in blocks
-                        ]
-                    )
-                    ds.append(d)
-                    tfs.append(tf)
-                    dls.append(dl)
-            if not ds:
-                continue
-            d = np.concatenate(ds)
-            tf = np.concatenate(tfs).astype(np.float64)
-            dl = np.concatenate(dls).astype(np.float64)
-            uniq, inv = np.unique(d, return_inverse=True)
-            tf_sum = np.zeros(uniq.size)
-            np.add.at(tf_sum, inv, tf)
-            dl_u = np.zeros(uniq.size)
-            dl_u[inv] = dl  # constant per doc
-            df_g = int(uniq.size)
-            idf = (
-                bm25_idf(self.n, df_g)
-                if mode == "bm25"
-                else tfidf_idf(self.n, df_g)
-            )
-            if mode == "bm25":
-                s = idf * tf_sum * (K1 + 1.0) / (
-                    tf_sum
-                    + K1 * (1.0 - B + B * dl_u / self.avgdl)
-                )
-            else:
-                s = tf_sum * idf
-            all_d.append(uniq)
-            all_s.append(s)
-        if not all_d:
-            return []
-        d = np.concatenate(all_d)
-        s = np.concatenate(all_s)
-        uniq, inv = np.unique(d, return_inverse=True)
-        scores = np.zeros(uniq.size)
-        np.add.at(scores, inv, s)
-        if exc_by_salt:
-            exc = np.concatenate(list(exc_by_salt.values()))
-            keep = ~np.isin(uniq, exc)
-            uniq, scores = uniq[keep], scores[keep]
-        idx = np.lexsort((uniq, -scores))[: min(k, uniq.size)]
-        return [(int(uniq[i]), float(scores[i])) for i in idx]
-
-    def _excluded_docids_by_salt(
-        self, excluded: list[str]
-    ) -> dict[int, "np.ndarray"]:
-        """Decode the excluded terms' posting docids, grouped by their
-        doc-range salt — the driver-side NOT set. Cost tracks the
-        excluded terms' posting sizes (the same reads a positive query
-        on those terms would do), never the corpus."""
-        import numpy as np
-
-        from .operators.codec import decode_posting_list
-
-        by_salt: dict[int, list] = {}
-        for _t, (df, salted) in self._cached_term_lists(
-            excluded
-        ).items():
-            if df <= 0:
-                continue
-            for salt, blocks in salted:
-                d = decode_posting_list(
-                    [
-                        b if isinstance(b, dict) else b.asDict()
-                        for b in blocks
-                    ]
-                )[0]
-                by_salt.setdefault(salt, []).append(d)
-        return {
-            s: np.unique(np.concatenate(v))
-            for s, v in by_salt.items()
-        }
-
     def search_local(
-        self, query: str, k: int = 50, mode: str = "bm25",
-        semantics: str = "or", fuzzy: bool = False,
-        negation: bool = False, synonyms: bool = False,
-        boost: str | None = None,
+        self, query: str, k: int = 50, mode: str = "bm25", **opts
     ) -> list[tuple[int, float]]:
-        """Serve a query entirely on the DRIVER: footer-cached point
-        reads of the terms' lexicon and postings bucket directories
-        (``PointReader``: each directory's footers parsed once per
-        engine, only row groups whose term range can hold a query term
-        read), the same NumPy block-max kernel per doc-range shard, and
-        a driver-side merge — zero Spark jobs, rank-identical to the
+        """Serve a query entirely on the DRIVER (query.search_local;
+        ``opts``: semantics, fuzzy, negation, synonyms, boost):
+        footer-cached point reads of the terms' lexicon and postings
+        bucket directories, the NumPy block-max kernel per doc-range
+        shard for plain OR and the full-decode accumulate scorer for
+        every other feature — zero Spark jobs, rank-identical to the
         distributed paths (pytest-enforced).
 
         This is the search-head serving mode: a Spark job costs ~0.5s of
@@ -1883,256 +1156,7 @@ class SearchEngine:
         'wand' path when candidate posting lists exceed driver memory —
         at 10^12 docs that's head terms, exactly where the cluster earns
         its keep; the two paths share kernel and index format."""
-        import os
-
-        import numpy as np
-
-        from .operators.wand import merge_topk, score_shard_topk
-
-        excluded: list[str] = []
-        required: list[str] = []
-        t_should: list[str] = []
-        t_must: list[str] = []
-        t_not: list[str] = []
-        if negation:
-            # the flag enables the Lucene operators: -term (NOT),
-            # +term (MUST), and title: field scoping; bare terms stay
-            # SHOULD
-            from .functions.analyzer import split_boolean
-
-            should_q, must_q, neg_q = split_boolean(query)
-            if "title:" in (query or "").lower():
-                (
-                    should_q, must_q, neg_q,
-                    t_should, t_must, t_not, f_contra,
-                ) = self._parse_field_clauses(should_q, must_q, neg_q)
-                if f_contra:
-                    return []
-            if neg_q.strip():
-                try:
-                    excluded = self.analyze(neg_q)
-                except EmptyQueryError:
-                    excluded = []
-            if must_q.strip():
-                try:
-                    required = self.analyze(must_q)
-                except EmptyQueryError:
-                    required = []
-            query = f"{should_q} {must_q}".strip()
-            if not query and not (t_should or t_must):
-                return []  # pure-NOT query ranks nothing
-        has_fields = bool(t_should or t_must or t_not)
-        if not (query or "").strip():
-            if not has_fields:
-                # reference contract: a blank query RAISES (the HTTP
-                # 400 'Empty query' body) — only field extraction may
-                # legitimately empty the bag part
-                self.analyze(query)
-            terms = []
-        else:
-            terms = (
-                # trailing-* tokens expand to top-df lexicon matches
-                self.expand_query_terms(query)
-                if "*" in (query or "")
-                else self.analyze(query)
-            )
-        if not terms and not (t_should or t_must):
-            return []
-        if fuzzy:
-            # did-you-mean: zero-df terms swap to their best spell
-            # correction before retrieval (fuzzy_terms; needs the
-            # SymSpell layout)
-            terms, _ = self.fuzzy_terms(terms)
-        from .functions.analyzer import resolve_boolean_overlap
-
-        terms, contradiction = resolve_boolean_overlap(
-            terms,
-            terms if semantics == "and" else required,
-            excluded,
-        )
-        if contradiction or (not terms and not has_fields):
-            return []  # +t -t contradiction, or nothing positive left
-        required = [t for t in required if t in terms]
-        if not os.path.isdir(f"{self.index_dir}/term_stats"):
-            raise FileNotFoundError(
-                f"{self.index_dir}/term_stats missing — the local serving "
-                "path needs the lexicon side table; rebuild the index or "
-                "use path='wand'"
-            )
-        if has_fields:
-            if (
-                semantics == "and" or synonyms or mode == "bm25f"
-                or fuzzy or boost
-            ):
-                raise ValueError(
-                    "field-scoped terms (title:) compose with OR and "
-                    "+/- only — not with semantics=and, synonyms, "
-                    "bm25f, fuzzy, or boost"
-                )
-            return self._search_local_fielded(
-                terms, required, t_should, t_must, t_not, excluded,
-                k, mode,
-            )
-        exc_by_salt = (
-            self._excluded_docids_by_salt(excluded) if excluded else {}
-        )
-        if boost is not None and boost != "":
-            if boost != "static":
-                raise ValueError(
-                    f"unknown boost {boost!r}; supported: 'static'"
-                )
-            if (
-                semantics == "and" or required or synonyms
-                or mode == "bm25f"
-            ):
-                raise ValueError(
-                    "boost=static composes with plain OR (and -term "
-                    "NOT) retrieval only"
-                )
-            return self._search_local_boosted(
-                terms, k, mode, exc_by_salt
-            )
-        if synonyms and self._load_synonyms():
-            if semantics == "and" or required:
-                raise ValueError(
-                    "synonyms compose with OR/SHOULD semantics only (a "
-                    "synonym group IS a disjunction)"
-                )
-            if mode == "bm25f":
-                raise ValueError(
-                    "bm25f does not compose with synonym groups yet — "
-                    "pick one of mode=bm25f / synonyms=true"
-                )
-            return self._search_local_synonyms(
-                terms, k, mode, exc_by_salt
-            )
-        if mode == "bm25f":
-            if semantics == "and" or required:
-                raise ValueError(
-                    "bm25f serves OR/SHOULD semantics (title-boosted "
-                    "accumulation); AND/MUST composition is not "
-                    "supported"
-                )
-            return self._search_local_bm25f(terms, k, exc_by_salt)
-        lists = self._cached_term_lists(terms)
-        if semantics == "and" or required:
-            return self._search_local_and(
-                lists, terms, k, mode, exc_by_salt,
-                required=(
-                    None if semantics == "and" else required
-                ),
-            )
-        by_salt: dict[int, list[dict]] = {}
-        for _t, (df, salted) in lists.items():
-            if df <= 0:
-                continue
-            for salt, blocks in salted:
-                by_salt.setdefault(salt, []).append(
-                    {"df": df, "blocks": blocks}
-                )
-        if not by_salt:
-            return []
-        shard_results = []
-        for salt, tls in by_salt.items():
-            exc = exc_by_salt.get(salt)
-            if exc is not None and exc.size:
-                # excluded docids ride the kernel's decode-time tombs
-                # mask (sorted-unique by construction): NOT docs drop
-                # BEFORE the top-k cut, so the heap stays k-sized no
-                # matter how common the excluded term is — the same
-                # mechanism tiered distributed serving uses
-                tls = [{**tl, "tombs": exc} for tl in tls]
-            d, s = score_shard_topk(tls, self.n, self.avgdl, k, mode)
-            shard_results.append((d, s))
-        return merge_topk(shard_results, k)
-
-    def _search_local_and(
-        self, lists: dict, terms: list[str], k: int, mode: str,
-        exc_by_salt: dict | None = None,
-        required: list[str] | None = None,
-    ) -> list[tuple[int, float]]:
-        """Conjunctive retrieval on the driver-local path: decode the
-        candidate lists (already in hand from the cache/pyarrow read),
-        keep docs present in every REQUIRED term's postings, score
-        those over ALL query terms. ``required=None`` = every term
-        (semantics='and'); a subset = Lucene's ``+term`` MUST with the
-        rest as SHOULD (optional terms add to the score where present
-        via a masked gather). Block-max pruning has nothing to add
-        here — the intersection is the pruning. Results equal the
-        exhaustive path (pytest)."""
-        import numpy as np
-
-        from . import B, K1
-        from .operators.codec import decode_posting_list
-        from .oracle_py.oracle import bm25_idf, tfidf_idf
-
-        req = set(required) if required is not None else set(terms)
-        per_term = []
-        for t in dict.fromkeys(terms):
-            df, salted = lists.get(t, (0, []))
-            if df <= 0:
-                if t in req:
-                    return []  # an absent required term empties MUST
-                continue  # absent SHOULD term contributes nothing
-            parts = [
-                decode_posting_list(
-                    [
-                        b if isinstance(b, dict) else b.asDict()
-                        for b in blocks
-                    ]
-                )
-                for _salt, blocks in salted
-            ]
-            d = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts])
-            dl = np.concatenate([p[2] for p in parts])
-            per_term.append((t in req, df, d, tf, dl))
-        req_lists = [d for is_r, _df, d, _tf, _dl in per_term if is_r]
-        if not req_lists:
-            return []
-        # docs containing every required term
-        common = req_lists[0]
-        for d in req_lists[1:]:
-            common = common[np.isin(common, d, assume_unique=True)]
-            if common.size == 0:
-                return []
-        if exc_by_salt:
-            # NOT filter before the top-k cut; the exclusion arrays are
-            # salt-keyed but np.isin over their union is equivalent (and
-            # the intersection is already small)
-            exc_all = np.concatenate(list(exc_by_salt.values()))
-            common = common[~np.isin(common, exc_all)]
-            if common.size == 0:
-                return []
-        common = np.sort(common)
-        scores = np.zeros(common.size, dtype=np.float64)
-        for _is_r, df, d, tf, dl in per_term:
-            order = np.argsort(d)
-            ds = d[order]
-            pos = np.minimum(
-                np.searchsorted(ds, common), ds.size - 1
-            )
-            sel = order[pos]
-            present = ds[pos] == common  # all-True for required terms
-            if not present.any():
-                continue
-            idf = (
-                bm25_idf(self.n, int(df))
-                if mode == "bm25"
-                else tfidf_idf(self.n, int(df))
-            )
-            tfd = tf[sel].astype(np.float64)
-            if mode == "bm25":
-                contrib = idf * tfd * (K1 + 1.0) / (
-                    tfd
-                    + K1
-                    * (1.0 - B + B * dl[sel].astype(np.float64) / self.avgdl)
-                )
-            else:
-                contrib = tfd * idf
-            scores[present] += contrib[present]
-        idx = np.lexsort((common, -scores))[: min(k, common.size)]
-        return [(int(common[i]), float(scores[i])) for i in idx]
+        return query_path.search_local(self, query, k, mode, **opts)
 
     def search_ids(
         self,
@@ -2161,105 +1185,38 @@ class SearchEngine:
         downgrades — the group's summed-tf saturation is an aggregation,
         which block-max skipping cannot express); rank-identical across
         paths (pytest)."""
-        excluded: list[str] = []
-        required: list[str] = []
-        t_should: list[str] = []
-        t_must: list[str] = []
-        t_not: list[str] = []
-        if negation and path != "local":
-            from .functions.analyzer import split_boolean
-
-            should_q, must_q, neg_q = split_boolean(query)
-            if "title:" in (query or "").lower():
-                (
-                    should_q, must_q, neg_q,
-                    t_should, t_must, t_not, f_contra,
-                ) = self._parse_field_clauses(should_q, must_q, neg_q)
-                if f_contra:
-                    return self.spark.createDataFrame(
-                        [], "docid long, score double"
-                    )
-            if neg_q.strip():
-                try:
-                    excluded = self.analyze(neg_q)
-                except EmptyQueryError:
-                    excluded = []
-            if must_q.strip():
-                try:
-                    required = self.analyze(must_q)
-                except EmptyQueryError:
-                    required = []
-            query = f"{should_q} {must_q}".strip()
-            if not query and not (t_should or t_must):
-                return self.spark.createDataFrame(
-                    [], "docid long, score double"
-                )
-            if (
-                excluded or required or t_should or t_must or t_not
-            ) and path == "wand":
-                path = "exhaustive"
-        has_fields = bool(t_should or t_must or t_not)
-        if semantics == "and" and path == "wand":
-            path = "exhaustive"
-        if not (query or "").strip():
-            if not has_fields:
-                self.analyze(query)  # blank query raises (400 body)
-            terms = []
-        else:
-            terms = (
-                # wildcard expansion is a driver-side lexicon scan, so
-                # the DISTRIBUTED paths expand identically to the local
-                self.expand_query_terms(query)
-                if "*" in (query or "")
-                else self.analyze(query)
-            )
-        if not terms and not (t_should or t_must):
-            return self.spark.createDataFrame([], "docid long, score double")
-        from .functions.analyzer import resolve_boolean_overlap
-
-        terms, contradiction = resolve_boolean_overlap(
-            terms,
-            terms if semantics == "and" else required,
-            excluded,
-        )
-        if contradiction or (not terms and not has_fields):
-            return self.spark.createDataFrame(
-                [], "docid long, score double"
-            )
-        required = [t for t in required if t in terms]
-        if has_fields and path != "local":
-            if semantics == "and" or synonyms or mode == "bm25f":
-                raise ValueError(
-                    "field-scoped terms (title:) compose with OR and "
-                    "+/- only — not with semantics=and, synonyms, or "
-                    "bm25f"
-                )
-            return self._search_ids_fielded(
-                terms, required, t_should, t_must, t_not, excluded,
-                k, mode,
-            )
         if path == "local":
-            rows = [
-                (int(d), float(s)) for d, s in self.search_local(
-                    query, k=k, mode=mode, semantics=semantics,
-                    negation=negation, synonyms=synonyms,
-                )
-            ]
+            rows = self.search_local(
+                query, k=k, mode=mode, semantics=semantics,
+                negation=negation, synonyms=synonyms,
+            )
             return self.spark.createDataFrame(
-                rows, "docid long, score double"
+                [(int(d), float(s)) for d, s in rows],
+                "docid long, score double",
+            )
+        # the driver-local parse: wildcards expand driver-side, so the
+        # distributed paths expand identically to the local one
+        c = query_path.parse(self, query, semantics, negation)
+        query_path.check_flags(self, c, mode, semantics, synonyms)
+        if c.empty:
+            return self.spark.createDataFrame([], "docid long, score double")
+        terms, required, excluded = c.terms, c.must, c.excluded
+        if path == "wand" and (
+            semantics == "and" or required or excluded or c.fields
+        ):
+            path = "exhaustive"
+        if c.fields:
+            return self._search_ids_fielded(
+                terms, required, c.t_should, c.t_must, c.t_not, excluded,
+                k, mode,
             )
         syn = self._load_synonyms() if synonyms else {}
         if syn:
-            if semantics == "and" or required:
-                raise ValueError(
-                    "synonyms compose with OR/SHOULD semantics only (a "
-                    "synonym group IS a disjunction)"
-                )
             from .operators.scoring import score_synonyms
 
             # each query term's group (itself + sidecar synonyms) scores
             # as ONE pseudo-term: summed tf, TRUE disjunction df — the
-            # distributed twin of _search_local_synonyms, same sidecar
+            # distributed twin of query.accumulate's groups, same sidecar
             groups = [
                 list(dict.fromkeys([t] + syn.get(t, [])))
                 for t in dict.fromkeys(terms)
@@ -2290,12 +1247,6 @@ class SearchEngine:
         if mode == "bm25f":
             import os as _os
 
-            if semantics == "and" or required:
-                raise ValueError(
-                    "bm25f serves OR/SHOULD semantics (title-boosted "
-                    "accumulation); AND/MUST composition is not "
-                    "supported"
-                )
             if not _os.path.isdir(f"{self.index_dir}/title_tf"):
                 raise FileNotFoundError(
                     f"{self.index_dir}/title_tf missing — BM25F needs "
@@ -2423,11 +1374,6 @@ class SearchEngine:
             cache = self._facet_cache = {}
         if field in cache:
             return cache[field]
-        if field not in self.facet_fields():
-            raise ValueError(
-                f"unknown facet field {field!r}; this index has: "
-                f"{self.facet_fields() or 'none'}"
-            )
         tbl = self._side_dataset("docs").to_table(
             columns=["docid", field, "salt"]
         )
@@ -2454,58 +1400,10 @@ class SearchEngine:
         self, query: str, field: str = "lang", negation: bool = False,
         top: int = 100,
     ) -> dict:
-        """Per-facet doc counts over the FULL match set (every doc
-        containing any positive query term — OR semantics), NOT just
-        the top-k page: the search-head companion the reference's UI
-        paginates blindly without. Bounded cost, zero Spark jobs: the
-        match set decodes from the SAME cached posting reads scoring
-        used (the cost a positive query on those terms already paid),
-        facet values come from the cached doc-values arrays
-        (_facet_arrays). Composes with ``-term`` NOT under
-        ``negation=True`` (excluded docs leave the counts). A null
-        facet value counts under ``""``. ``top`` caps the returned
-        categories (count desc, value asc — Lucene facet order): a
-        high-cardinality field (source domains at web scale) must not
-        produce an unbounded response. ``+must`` and ``title:``
-        clauses raise ValueError (facet_query_terms)."""
-        import numpy as np
-
-        parsed = facet_query_terms(self, query, negation)
-        if parsed is None:
-            return {}
-        terms, excluded = parsed
-        by_salt, cats = self._facet_arrays(field)
-        # same decode-by-salt helper the NOT path uses: docids
-        # containing ANY of the given terms, grouped by shard
-        pos = self._excluded_docids_by_salt(terms)
-        exc = (
-            self._excluded_docids_by_salt(excluded) if excluded else {}
-        )
-        totals = np.zeros(len(cats), np.int64)
-        for salt, m in pos.items():
-            e = exc.get(salt)
-            if e is not None and e.size:
-                m = m[~np.isin(m, e)]
-            fd, codes = by_salt.get(
-                salt, (np.empty(0, np.int64), np.empty(0, np.int32))
-            )
-            if not m.size or not fd.size:
-                continue
-            p = np.searchsorted(fd, m)
-            p = np.minimum(p, fd.size - 1)
-            hit = fd[p] == m
-            totals += np.bincount(
-                codes[p[hit]], minlength=len(cats)
-            ).astype(np.int64)
-        ranked = sorted(
-            (
-                (("" if c is None else c), int(n))
-                for c, n in zip(cats, totals)
-                if n > 0
-            ),
-            key=lambda kv: (-kv[1], kv[0]),
-        )
-        return dict(ranked[: max(1, int(top))])
+        """Per-facet doc counts over the query's FULL match set, not
+        just the top-k page (query.facet_counts): bounded cost, zero
+        Spark jobs, ``top`` caps the categories."""
+        return query_path.facet_counts(self, query, field, negation, top)
 
     def lookup_docs(
         self, docids: list[int], with_images: bool = True
@@ -2607,25 +1505,13 @@ class SearchEngine:
         )
 
     def query_response(
-        self,
-        query: str,
-        option_name: str = "tfidf",
-        k: int = 50,
-        path: str = "local",
-        semantics: str = "or",
-        page: int | None = None,
-        per_page: int = 10,
-        phrase: bool = False,
-        fuzzy: bool = False,
-        highlight: bool = False,
-        negation: bool = False,
-        synonyms: bool = False,
-        facets: str | None = None,
-        facet_top: int = 100,
-        boost: str | None = None,
+        self, query: str, option_name: str = "tfidf", **opts
     ) -> dict:
         """The reference's full HTTP response shape
-        (backend/controllers/queryController.js:11-59):
+        (backend/controllers/queryController.js:11-59), served by
+        query.query_response (``opts``: k, path, semantics, page,
+        per_page, phrase, fuzzy, highlight, negation, synonyms, facets,
+        facet_top, boost):
 
         - empty/whitespace query -> {"success": False, "result": [],
           "error": "Empty query"} (the exact 400 body,
@@ -2639,152 +1525,9 @@ class SearchEngine:
           utils/profiler.js:8-29 (validate_input / stem_query /
           get_documents / fetch_results / get_image_filenames /
           total_request; connect_to_db has no analogue — there is no
-          connection pool). sysSnapshot maps Node's process.memoryUsage
-          (profiler.js:21-29) to the driver process: rss_mb = VmRSS,
-          heapUsed_mb = VmData, heapTotal_mb = VmSize from
-          /proc/self/status; eventLoopDelay_ms pinned 0 as in the
-          reference.
+          connection pool).
         """
-
-        import os as _os
-
-        # quoted spans auto-route to mixed phrase semantics WHEN the
-        # positional sidecar exists; without it quotes keep the legacy
-        # behavior (the analyzer strips them -> bag-of-words), so
-        # existing indexes never start erroring on quoted input
-        mixed = '"' in (query or "") and _os.path.isdir(
-            f"{self.index_dir}/positions"
-        )
-
-        def get_ids(mode):
-            if phrase:
-                # exact-phrase extension: BM25 pseudo-term ranks from
-                # the positional sidecar, reference response shape
-                return [
-                    (d, s) for d, s, _tf in self.search_phrase(
-                        query, k=k
-                    )
-                ]
-            if mixed:
-                if negation:
-                    # NOT composes with mixed quoted queries: strip
-                    # the -terms, run mixed to top-(k + |excluded|)
-                    # (exact — at most that many results can drop),
-                    # then filter. Quoted spans themselves are never
-                    # negated (Lucene parity: NOT applies to terms).
-                    from .functions.analyzer import split_negations
-
-                    pos_q, neg_q = split_negations(query)
-                    exc: set[int] = set()
-                    if neg_q.strip():
-                        try:
-                            exc = {
-                                int(d)
-                                for a in self._excluded_docids_by_salt(
-                                    self.analyze(neg_q)
-                                ).values()
-                                for d in a
-                            }
-                        except EmptyQueryError:
-                            exc = set()
-                    # over-fetch is CAPPED then iteratively deepened:
-                    # excluding a high-df term must not grow the top-k
-                    # heap (and the driver-side result list) by its
-                    # whole posting count up front. Exact: we only stop
-                    # shallow when the filtered page is already full or
-                    # the engine returned fewer rows than asked (no
-                    # deeper matches exist).
-                    k_full = k + len(exc)
-                    k_eff = min(k_full, max(4 * k, k + 64))
-                    while True:
-                        res = self.search_mixed(
-                            pos_q, k=k_eff, mode=mode
-                        )
-                        out = [
-                            (d, s) for d, s in res if d not in exc
-                        ][:k]
-                        if (
-                            len(out) >= k
-                            or len(res) < k_eff
-                            or k_eff >= k_full
-                        ):
-                            return out
-                        k_eff = min(k_full, 4 * k_eff)
-                return self.search_mixed(query, k=k, mode=mode)
-            if path != "local":
-                return [
-                    (r["docid"], r["score"])
-                    for r in self.search_ids(
-                        query, k=k, mode=mode, path=path,
-                        semantics=semantics, negation=negation,
-                        synonyms=synonyms,
-                    ).collect()
-                ]
-            return self.search_local(
-                query, k=k, mode=mode, semantics=semantics, fuzzy=fuzzy,
-                negation=negation, synonyms=synonyms, boost=boost,
-            )
-
-        if fuzzy and path != "local":
-            raise ValueError(
-                "fuzzy (did-you-mean) is served by the local path"
-            )
-        if boost:
-            if path != "local":
-                raise ValueError(
-                    "boost=static is served by the local path (the "
-                    "distributed twin is the bm25_static_rank plan)"
-                )
-            if phrase or mixed:
-                raise ValueError(
-                    "boost=static composes with bag-of-words retrieval "
-                    "only (not phrase/mixed queries)"
-                )
-        # highlight/corrections analyze the POSITIVE part only — an
-        # excluded term never appears in results
-        hl_query = query
-        if negation:
-            from .functions.analyzer import split_negations
-
-            hl_query = split_negations(query)[0]
-        decorate = None
-        if highlight:
-            from .functions.textstats import highlight_snippet
-
-            hterms = set(self.analyze(hl_query))
-            if fuzzy:
-                hterms |= set(
-                    self.fuzzy_terms(self.analyze(hl_query))[0]
-                )
-
-            def decorate(s, _t=frozenset(hterms)):
-                return highlight_snippet(s, _t, self.analyzer)
-
-        resp = assemble_reference_response(
-            query, option_name, self.analyze, get_ids, self.lookup_docs,
-            page=page, per_page=per_page, decorate_snippet=decorate,
-        )
-        if fuzzy and resp.get("success") is not False:
-            # surface what was corrected (extension field; absent when
-            # nothing needed correcting, so the reference shape holds)
-            _t, corr = self.fuzzy_terms(self.analyze(query))
-            if corr:
-                resp["corrections"] = corr
-        if facets and resp.get("success") is not False:
-            # per-facet counts over the FULL match set (facet_counts);
-            # extension field — absent unless requested, so the
-            # reference response shape holds. Comma-separated fields
-            # share the match-set decode via the term-list cache.
-            resp["facets"] = {
-                f: self.facet_counts(
-                    query, field=f, negation=negation, top=facet_top
-                )
-                for f in (
-                    s.strip() for s in facets.split(",")
-                )
-                if f
-            }
-        return resp
+        return query_path.query_response(self, query, option_name, **opts)
 
     def image_results(
         self, query: str, k: int = 50, mode: str = "bm25",

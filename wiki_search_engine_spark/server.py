@@ -111,7 +111,7 @@ class _Handler(BaseHTTPRequestHandler):
         except ValueError:
             page, per_page = None, 10
         # &phrase=true — exact-phrase extension over the positional
-        # sidecar (single-index engines built with positions=True)
+        # sidecar (every segment built with positions=True)
         phrase = (qs.get("phrase") or ["false"])[0].lower() in (
             "1", "true", "yes",
         )
@@ -153,71 +153,18 @@ class _Handler(BaseHTTPRequestHandler):
             )
             return
         # &boost=static — additive PageRank authority boost on the
-        # local serving path (needs the static_rank sidecar)
+        # local serving path (needs the static_rank sidecar). Every
+        # engine serves every flag through one query_response; a
+        # combination it cannot serve raises ValueError -> 400 below.
         boost = (qs.get("boost") or [""])[0].strip().lower()
-        kwargs = {}
-        if boost:
-            if not hasattr(self.server.engine, "_static_rank_arrays"):
-                self._send(
-                    400,
-                    {
-                        "success": False, "result": [],
-                        "error": "boost is single-index serving only",
-                    },
-                )
-                return
-            kwargs["boost"] = boost
+        flags = {
+            "boost": boost, "negation": negation, "synonyms": synonyms,
+            "highlight": highlight, "fuzzy": fuzzy, "phrase": phrase,
+        }
+        kwargs = {f: v for f, v in flags.items() if v}
         if facets:
-            if not hasattr(self.server.engine, "facet_counts"):
-                self._send(
-                    400,
-                    {
-                        "success": False, "result": [],
-                        "error": "facet counts are single-index "
-                        "serving only",
-                    },
-                )
-                return
             kwargs["facets"] = facets
             kwargs["facet_top"] = facet_top
-        if negation:
-            kwargs["negation"] = True
-        if synonyms:
-            if not hasattr(self.server.engine, "_load_synonyms"):
-                self._send(
-                    400,
-                    {
-                        "success": False, "result": [],
-                        "error": "synonym expansion is unsupported by "
-                        "this engine",
-                    },
-                )
-                return
-            kwargs["synonyms"] = True
-        if highlight and hasattr(self.server.engine, "fuzzy_terms"):
-            kwargs["highlight"] = True
-        if fuzzy:
-            if not hasattr(self.server.engine, "fuzzy_terms"):
-                self._send(
-                    400,
-                    {
-                        "success": False, "result": [],
-                        "error": "fuzzy search is single-index only",
-                    },
-                )
-                return
-            kwargs["fuzzy"] = True
-        if phrase:
-            if not hasattr(self.server.engine, "search_phrase"):
-                self._send(
-                    400,
-                    {
-                        "success": False, "result": [],
-                        "error": "phrase search is single-index only",
-                    },
-                )
-                return
-            kwargs["phrase"] = True
         try:
             # &semantics=and — conjunctive retrieval, an extension
             # beyond the reference API (default 'or' is the reference's)

@@ -23,16 +23,23 @@ compaction" segment engine: scores are IDENTICAL to the compacted
 - N / avgdl: segment stats combine, minus the overridden docs' counts
   and lengths (a pruned point lookup of the later segments' docids in
   earlier ``doc_stats``, which is docid-sorted for this);
-- df per query term: counted from the LIVE postings — the candidate
-  lists are decoded anyway to score, so tombstoned postings are both
-  excluded from scoring and subtracted from df before idf is computed
-  (two passes over arrays already in memory, not extra IO).
+- df per query term: the summed lexicon df when no doc is overridden;
+  otherwise counted from the LIVE postings, tombstoned postings
+  subtracted before idf is computed.
 
-Two serving paths, both exact:
+A TieredEngine is a SEGMENT SET (``segments`` = [(segment engine,
+tombstones), ...], live ``n``/``avgdl``, ``overridden``) — the same
+shape a single SearchEngine presents as one segment with no tombstones.
+It keeps tombstone construction, the cross-segment lexicon aggregations
+(wildcard, suggest, spell correction, synonyms) and the distributed
+executors; querying is the one shared path. Two serving paths, both
+exact:
 
-- ``search_local`` — driver-side (pyarrow bucket reads via each
-  segment's hot-term cache, NumPy scoring), exhaustive over the query's
-  candidate lists: the search-head mode;
+- ``search_local`` / ``query_response`` — driver-side, query.py: the
+  block-max kernel once per (segment, salt) for plain OR with the
+  segment's tombstones as its drop mask, the full-decode accumulate
+  scorer over live postings for every other feature — the search-head
+  mode;
 - ``search_ids`` — DISTRIBUTED: phase 1 computes exact live df where
   the postings are (stale hits subtracted during a docid-only decode of
   the pruned candidates), phase 2 runs the block-max WAND shard kernel
@@ -57,9 +64,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
-from . import B, K1
-from .engine import SearchEngine
-from .oracle_py.oracle import bm25_idf, tfidf_idf
+from . import query as query_path
+from .engine import EmptyQueryError, SearchEngine
 
 _COMPAT_KEYS = ("stem", "analyzer", "n_buckets", "salt_bits")
 
@@ -298,48 +304,11 @@ class TieredEngine:
         # table), so live df == lexicon sums and the tombstone filters
         # are no-ops.
         self.overridden = overridden
+        # the segment set the query path runs over (query.py)
+        self.segments = list(zip(self.engines, self.tombstones))
 
     def analyze(self, query: str) -> list[str]:
         return self.engines[0].analyze(query)
-
-    def _live_term_postings_many(
-        self, terms: list[str]
-    ) -> dict[str, tuple[int, list]]:
-        """Decoded LIVE postings per term across segments:
-        term -> (live df, [(docids, tfs, doclens), ...]), tombstoned
-        entries removed. Live df == total rows (one posting per doc;
-        segments are docid-disjoint after tombstoning). ALL terms load
-        through one ``_cached_term_lists`` call per segment — one
-        lexicon read and one bucket-grouped postings read each, not one
-        per term."""
-        from .operators.codec import decode_posting_list
-
-        out: dict[str, tuple[int, list]] = {t: (0, []) for t in terms}
-        for i, eng in enumerate(self.engines):
-            lists = eng._cached_term_lists(terms)
-            tombs = self.tombstones[i]
-            for t in terms:
-                dfi, salted = lists[t]
-                if dfi <= 0:
-                    continue
-                df, parts = out[t]
-                for _salt, blocks in salted:
-                    d, tf, dl = decode_posting_list(
-                        [
-                            b if isinstance(b, dict) else b.asDict()
-                            for b in blocks
-                        ]
-                    )
-                    if tombs.size and d.size:
-                        from .operators.codec import isin_sorted
-
-                        keep = ~isin_sorted(tombs, d)
-                        d, tf, dl = d[keep], tf[keep], dl[keep]
-                    if d.size:
-                        parts.append((d, tf, dl))
-                        df += int(d.size)
-                out[t] = (df, parts)
-        return out
 
     def expand_wildcard(
         self, pattern: str, cap: int | None = None
@@ -363,8 +332,6 @@ class TieredEngine:
         bounded by the cap (+ boundary ties) and is postings the query
         on the expansion would read anyway; append-only segment lists
         (``overridden == 0``) skip it entirely: stored == live there."""
-        from .engine import SearchEngine
-
         cap = cap or SearchEngine.MAX_WILDCARD_EXPANSIONS
         agg: dict[str, int] = {}
         for eng in self.engines:
@@ -386,30 +353,12 @@ class TieredEngine:
                 if kth > ranked[i][1]:
                     break
             names = [t for t, _ in ranked[i:i + chunk]]
-            lp = self._live_term_postings_many(names)
-            by_live.extend(
-                (t, lp[t][0]) for t in names if lp[t][0] > 0
-            )
+            lp = query_path.live_df(self, names)
+            by_live.extend((t, lp[t]) for t in names if lp[t] > 0)
             i += chunk
         return sorted(by_live, key=lambda kv: (-kv[1], kv[0]))[:cap]
 
-    def expand_query_terms(self, query: str) -> list[str]:
-        """Wildcard-aware tiered query analysis — the segment-list
-        twin of SearchEngine.expand_query_terms (same token split,
-        same skip-on-unanchored contract)."""
-        from .engine import EmptyQueryError
-
-        parts = (query or "").split()
-        wild = [p for p in parts if "*" in p and len(p) > 1]
-        rest = " ".join(p for p in parts if p not in set(wild))
-        terms = self.analyze(rest) if rest.strip() else []
-        for w in wild:
-            try:
-                matches = self.expand_wildcard(w)
-            except EmptyQueryError:
-                continue
-            terms.extend(t for t, _df in matches)
-        return list(dict.fromkeys(terms))
+    expand_query_terms = SearchEngine.expand_query_terms
 
     def _load_synonyms(self) -> dict[str, list[str]]:
         """Query-time synonym map over a segment list: the NEWEST
@@ -428,656 +377,24 @@ class TieredEngine:
         self._syn_map = out
         return out
 
-    def _search_local_synonyms(
-        self, terms: list[str], k: int, mode: str,
-        excluded: list[str] | None = None,
-    ) -> list[tuple[int, float]]:
-        """Tiered SynonymQuery scoring: per query term, the group's
-        LIVE postings (tombstone-subtracted, newest-segment-wins)
-        merge into one pseudo-term — per-doc tf summed across members
-        AND segments, df = live docs containing any member. Scores use
-        the live n/avgdl, so results equal the compacted index's
-        synonym path (pytest)."""
-        syn = self._load_synonyms()
-        groups = [
-            list(dict.fromkeys([t] + syn.get(t, [])))
-            for t in dict.fromkeys(terms)
-        ]
-        need = sorted({g for grp in groups for g in grp})
-        live = self._live_term_postings_many(need)
-        all_d, all_s = [], []
-        for grp in groups:
-            ds, tfs, dls = [], [], []
-            for g in grp:
-                df, parts = live.get(g, (0, []))
-                if not df:
-                    continue
-                for d, tf, dl in parts:
-                    ds.append(d)
-                    tfs.append(tf)
-                    dls.append(dl)
-            if not ds:
-                continue
-            d = np.concatenate(ds)
-            tf = np.concatenate(tfs).astype(np.float64)
-            dl = np.concatenate(dls).astype(np.float64)
-            uniq, inv = np.unique(d, return_inverse=True)
-            tf_sum = np.zeros(uniq.size)
-            np.add.at(tf_sum, inv, tf)
-            dl_u = np.zeros(uniq.size)
-            dl_u[inv] = dl
-            df_g = int(uniq.size)
-            idf = (
-                bm25_idf(self.n, df_g)
-                if mode == "bm25"
-                else tfidf_idf(self.n, df_g)
-            )
-            if mode == "bm25":
-                s = idf * tf_sum * (K1 + 1.0) / (
-                    tf_sum + K1 * (1.0 - B + B * dl_u / self.avgdl)
-                )
-            else:
-                s = tf_sum * idf
-            all_d.append(uniq)
-            all_s.append(s)
-        if not all_d:
-            return []
-        d = np.concatenate(all_d)
-        s = np.concatenate(all_s)
-        uniq, inv = np.unique(d, return_inverse=True)
-        scores = np.zeros(uniq.size)
-        np.add.at(scores, inv, s)
-        if excluded:
-            live_exc = self._live_term_postings_many(
-                list(dict.fromkeys(excluded))
-            )
-            exc_parts = [
-                dd
-                for _t, (df, parts) in live_exc.items()
-                if df
-                for dd, _tf, _dl in parts
-            ]
-            if exc_parts:
-                exc = np.unique(np.concatenate(exc_parts))
-                keep = ~np.isin(uniq, exc)
-                uniq, scores = uniq[keep], scores[keep]
-        idx = np.lexsort((uniq, -scores))[: min(k, uniq.size)]
-        return [(int(uniq[i]), float(scores[i])) for i in idx]
-
     def search_local(
-        self, query: str, k: int = 50, mode: str = "bm25",
-        semantics: str = "or", fuzzy: bool = False,
-        negation: bool = False, synonyms: bool = False,
+        self, query: str, k: int = 50, mode: str = "bm25", **opts
     ) -> list[tuple[int, float]]:
-        """Driver-side tiered top-k, rank- and score-identical to the
-        compacted index (exact live df/N/avgdl — see module doc).
-        ``semantics='and'``: conjunctive retrieval — only docs whose
-        LIVE postings contain every query term. ``fuzzy``: did-you-mean
-        over segments — zero-LIVE-df terms swap to their best tiered
-        correction first (``fuzzy_terms``; every segment needs its
-        SymSpell layout — ``build_spellindex``). ``negation``:
-        Lucene-style ``-term`` NOT parsing (opt-in, engine.py
-        split_negations contract); docs whose LIVE postings contain any
-        excluded term drop BEFORE the top-k cut — tombstoned docs never
-        contribute to the NOT set any more than to scores."""
-        excluded: list[str] = []
-        required: list[str] = []
-        t_should: list[str] = []
-        t_must: list[str] = []
-        t_not: list[str] = []
-        if negation:
-            from .engine import EmptyQueryError
-            from .functions.analyzer import split_boolean
+        """Driver-side top-k over the segment set (query.search_local,
+        the same path a single index takes; ``opts``: semantics, fuzzy,
+        negation, synonyms, boost), rank- and score-identical to the
+        compacted index: live N/avgdl/df, tombstoned postings dropped
+        at decode time, NOT docs before the top-k cut. ``fuzzy``
+        corrects zero-LIVE-df terms (every segment needs its SymSpell
+        layout — ``build_spellindex``); ``boost='static'`` serves only
+        a set with one index segment."""
+        return query_path.search_local(self, query, k, mode, **opts)
 
-            should_q, must_q, neg_q = split_boolean(query)
-            if "title:" in (query or "").lower():
-                # same field parse as the single-index engine (the
-                # helper only needs self.analyze)
-                from .engine import SearchEngine
-
-                (
-                    should_q, must_q, neg_q,
-                    t_should, t_must, t_not, f_contra,
-                ) = SearchEngine._parse_field_clauses(
-                    self, should_q, must_q, neg_q
-                )
-                if f_contra:
-                    return []
-            if neg_q.strip():
-                try:
-                    excluded = self.analyze(neg_q)
-                except EmptyQueryError:
-                    excluded = []
-            if must_q.strip():
-                try:
-                    required = self.analyze(must_q)
-                except EmptyQueryError:
-                    required = []
-            query = f"{should_q} {must_q}".strip()
-            if not query and not (t_should or t_must):
-                return []
-        has_fields = bool(t_should or t_must or t_not)
-        if not (query or "").strip():
-            if not has_fields:
-                self.analyze(query)  # blank query raises (400 body)
-            terms = []
-        else:
-            terms = (
-                # wildcards expand over the union of segment lexicons
-                self.expand_query_terms(query)
-                if "*" in (query or "")
-                else self.analyze(query)
-            )
-        if (not terms and not has_fields) or not self.n:
-            return []
-        if fuzzy:
-            terms, _ = self.fuzzy_terms(terms)
-        from .functions.analyzer import resolve_boolean_overlap
-
-        terms, contradiction = resolve_boolean_overlap(
-            terms,
-            terms if semantics == "and" else required,
-            excluded,
-        )
-        if contradiction or (not terms and not has_fields):
-            return []  # +t -t contradiction, or nothing positive left
-        required = [t for t in required if t in terms]
-        if has_fields:
-            if semantics == "and" or synonyms or mode == "bm25f" or fuzzy:
-                raise ValueError(
-                    "field-scoped terms (title:) compose with OR and "
-                    "+/- only — not with semantics=and, synonyms, "
-                    "bm25f, or fuzzy"
-                )
-            return self._search_local_fielded(
-                terms, required, t_should, t_must, t_not, excluded,
-                k, mode,
-            )
-        if synonyms and self._load_synonyms():
-            if semantics == "and" or required:
-                raise ValueError(
-                    "synonyms compose with OR/SHOULD semantics only "
-                    "(a synonym group IS a disjunction)"
-                )
-            if mode == "bm25f":
-                raise ValueError(
-                    "bm25f does not compose with synonym groups yet — "
-                    "pick one of mode=bm25f / synonyms=true"
-                )
-            return self._search_local_synonyms(
-                terms, k, mode, excluded=excluded or None
-            )
-        if mode == "bm25f":
-            if semantics == "and" or required:
-                raise ValueError(
-                    "bm25f serves OR/SHOULD semantics (title-boosted "
-                    "accumulation); AND/MUST composition is not "
-                    "supported"
-                )
-            return self._search_local_bm25f(
-                terms, k, excluded=excluded or None
-            )
-        all_d, all_s = [], []
-        and_common = None
-        # terms gating membership: every term under AND, the +terms
-        # under MUST, none under plain OR
-        req = (
-            set(terms) if semantics == "and" else set(required)
-        )
-        live = self._live_term_postings_many(list(dict.fromkeys(terms)))
-        for t in dict.fromkeys(terms):
-            df, parts = live[t]
-            if not df:
-                if t in req:
-                    return []  # an absent required term empties MUST
-                continue
-            idf = (
-                bm25_idf(self.n, df)
-                if mode == "bm25"
-                else tfidf_idf(self.n, df)
-            )
-            term_d = []
-            for d, tf, dl in parts:
-                tfd = tf.astype(np.float64)
-                if mode == "bm25":
-                    s = idf * tfd * (K1 + 1.0) / (
-                        tfd
-                        + K1
-                        * (1.0 - B + B * dl.astype(np.float64) / self.avgdl)
-                    )
-                else:
-                    s = tfd * idf
-                all_d.append(d)
-                all_s.append(s)
-                term_d.append(d)
-            if t in req:
-                td = np.concatenate(term_d)
-                and_common = (
-                    td
-                    if and_common is None
-                    else and_common[
-                        np.isin(and_common, td, assume_unique=True)
-                    ]
-                )
-                if and_common.size == 0:
-                    return []
-        if not all_d:
-            return []
-        d = np.concatenate(all_d)
-        s = np.concatenate(all_s)
-        uniq, inv = np.unique(d, return_inverse=True)
-        acc = np.zeros(uniq.size, dtype=np.float64)
-        np.add.at(acc, inv, s)
-        if req and and_common is not None:
-            keep = np.isin(uniq, and_common, assume_unique=True)
-            uniq, acc = uniq[keep], acc[keep]
-        if excluded:
-            live_exc = self._live_term_postings_many(
-                list(dict.fromkeys(excluded))
-            )
-            exc_parts = [
-                d
-                for _t, (df, parts) in live_exc.items()
-                if df
-                for d, _tf, _dl in parts
-            ]
-            if exc_parts:
-                exc = np.unique(np.concatenate(exc_parts))
-                keep = ~np.isin(uniq, exc)
-                uniq, acc = uniq[keep], acc[keep]
-                if uniq.size == 0:
-                    return []
-        idx = np.lexsort((uniq, -acc))[: min(k, uniq.size)]
-        return [(int(uniq[i]), float(acc[i])) for i in idx]
-
-    def _search_local_fielded(
-        self, bag_terms: list[str], bag_required: list[str],
-        t_should: list[str], t_must: list[str], t_not: list[str],
-        bag_excluded: list[str], k: int, mode: str,
-    ) -> list[tuple[int, float]]:
-        """Tiered Lucene field scoping (``title:term`` /
-        ``+title:term`` / ``-title:term``): bag clauses score on the
-        LIVE postings with live df, title clauses on the LIVE title
-        sidecar rows (tf = title occurrences, df = live title row
-        count, dl = body length) — identical to the compacted index's
-        fielded results (pytest)."""
-        from .oracle_py.oracle import bm25_idf, tfidf_idf
-
-        def _score(tf, dl, df):
-            idf = (
-                bm25_idf(self.n, df)
-                if mode == "bm25"
-                else tfidf_idf(self.n, df)
-            )
-            if mode == "bm25":
-                return (
-                    idf * tf * (K1 + 1.0)
-                    / (tf + K1 * (1.0 - B + B * dl / self.avgdl))
-                )
-            return tf * idf
-
-        live = self._live_term_postings_many(
-            list(dict.fromkeys(bag_terms + bag_excluded))
-        )
-        trows = self._live_title_rows(
-            list(dict.fromkeys(t_should + t_must + t_not))
-        )
-        all_d, all_s, req_sets = [], [], []
-        for t in dict.fromkeys(bag_terms):
-            df, parts = live.get(t, (0, []))
-            if not df:
-                if t in bag_required:
-                    return []
-                continue
-            d = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts]).astype(
-                np.float64
-            )
-            dl = np.concatenate([p[2] for p in parts]).astype(
-                np.float64
-            )
-            all_d.append(d)
-            all_s.append(_score(tf, dl, df))
-            if t in bag_required:
-                req_sets.append(np.unique(d))
-        for t in dict.fromkeys(t_should + t_must):
-            td, ttf, tdl = trows[t]
-            if not td.size:
-                if t in t_must:
-                    return []
-                continue
-            all_d.append(td)
-            all_s.append(_score(ttf, tdl, int(td.size)))
-            if t in t_must:
-                req_sets.append(td)
-        if not all_d:
-            return []
-        d = np.concatenate(all_d)
-        s = np.concatenate(all_s)
-        uniq, inv = np.unique(d, return_inverse=True)
-        acc = np.zeros(uniq.size, dtype=np.float64)
-        np.add.at(acc, inv, s)
-        for rs in req_sets:
-            keep = np.isin(uniq, rs)
-            uniq, acc = uniq[keep], acc[keep]
-            if not uniq.size:
-                return []
-        exc_arrays = [
-            dd
-            for t in dict.fromkeys(bag_excluded)
-            for dd, _tf, _dl in live.get(t, (0, []))[1]
-        ]
-        for t in dict.fromkeys(t_not):
-            td, _ttf, _tdl = trows[t]
-            if td.size:
-                exc_arrays.append(td)
-        if exc_arrays:
-            exc = np.unique(np.concatenate(exc_arrays))
-            keep = ~np.isin(uniq, exc)
-            uniq, acc = uniq[keep], acc[keep]
-        idx = np.lexsort((uniq, -acc))[: min(k, uniq.size)]
-        return [(int(uniq[i]), float(acc[i])) for i in idx]
-
-    def _live_title_rows(self, terms: list[str]) -> dict:
-        """term -> (docids, title_tfs, body_doc_lens) LIVE across
-        segments: each segment's title_tf sidecar rows for the query
-        terms (bucket-pruned pyarrow read, cached per segment engine)
-        minus that segment's tombstones — newest-segment-wins exactly
-        like postings. Segments missing the sidecar (pre-BM25F builds)
-        contribute nothing; raises only when NO segment carries it."""
-        import os
-
-        from .operators.codec import isin_sorted
-
-        uniq_terms = list(dict.fromkeys(terms))
-        parts: dict[str, list] = {t: [] for t in uniq_terms}
-        any_sidecar = False
-        for i, eng in enumerate(self.engines):
-            if not os.path.isdir(f"{eng.index_dir}/title_tf"):
-                continue
-            any_sidecar = True
-            tombs = self.tombstones[i]
-            for t, (td, ttf, tdl) in eng._title_rows(
-                uniq_terms
-            ).items():
-                if tombs is not None and tombs.size and td.size:
-                    keep = ~isin_sorted(tombs, td)
-                    td, ttf, tdl = td[keep], ttf[keep], tdl[keep]
-                if td.size:
-                    parts[t].append((td, ttf, tdl))
-        if not any_sidecar:
-            raise FileNotFoundError(
-                "no segment carries the title_tf sidecar — BM25F needs "
-                "it; run `titleindex` on the segments (new builds write "
-                "it automatically)"
-            )
-        empty = (
-            np.empty(0, np.int64),
-            np.empty(0, np.float64),
-            np.empty(0, np.float64),
-        )
-        out: dict = {}
-        for t, ps in parts.items():
-            if not ps:
-                out[t] = empty
-                continue
-            td = np.concatenate([p[0] for p in ps])
-            ttf = np.concatenate([p[1] for p in ps]).astype(np.float64)
-            tdl = np.concatenate([p[2] for p in ps]).astype(np.float64)
-            order = np.argsort(td, kind="stable")
-            out[t] = (td[order], ttf[order], tdl[order])
-        return out
-
-    def _search_local_bm25f(
-        self, terms: list[str], k: int,
-        excluded: list[str] | None = None,
-        title_weight: float | None = None,
-    ) -> list[tuple[int, float]]:
-        """Tiered BM25F: live body postings merge with live title
-        sidecar rows per term — the same tf' = tf + (w-1)*tf_title
-        kernel as SearchEngine._search_local_bm25f, against the LIVE
-        n/avgdl, so results equal a compacted delete-rebuild's bm25f
-        (pytest)."""
-        from .engine import SearchEngine
-
-        w = (
-            SearchEngine.DEFAULT_TITLE_WEIGHT
-            if title_weight is None
-            else float(title_weight)
-        )
-        uniq_terms = list(dict.fromkeys(terms))
-        live = self._live_term_postings_many(uniq_terms)
-        trows = self._live_title_rows(uniq_terms)
-        all_d, all_s = [], []
-        for t in uniq_terms:
-            _df, parts = live.get(t, (0, []))
-            if parts:
-                d = np.concatenate([p[0] for p in parts])
-                tf = np.concatenate(
-                    [p[1] for p in parts]
-                ).astype(np.float64)
-                dl = np.concatenate(
-                    [p[2] for p in parts]
-                ).astype(np.float64)
-                order = np.argsort(d, kind="stable")
-                d, tf, dl = d[order], tf[order], dl[order]
-            else:
-                d = np.empty(0, np.int64)
-                tf = dl = np.empty(0, np.float64)
-            td, ttf, tdl = trows[t]
-            if w != 1.0 and td.size:
-                pos = np.searchsorted(d, td)
-                safe = np.minimum(pos, max(d.size - 1, 0))
-                in_body = (
-                    (pos < d.size) & (d[safe] == td)
-                    if d.size
-                    else np.zeros(td.size, bool)
-                )
-                tf = tf.copy()
-                tf[pos[in_body]] += (w - 1.0) * ttf[in_body]
-                d = np.concatenate([d, td[~in_body]])
-                tf = np.concatenate([tf, (w - 1.0) * ttf[~in_body]])
-                dl = np.concatenate([dl, tdl[~in_body]])
-            keep = tf > 0
-            d, tf, dl = d[keep], tf[keep], dl[keep]
-            if not d.size:
-                continue
-            idf = bm25_idf(self.n, int(d.size))
-            s = (
-                idf * tf * (K1 + 1.0)
-                / (tf + K1 * (1.0 - B + B * dl / self.avgdl))
-            )
-            all_d.append(d)
-            all_s.append(s)
-        if not all_d:
-            return []
-        d = np.concatenate(all_d)
-        s = np.concatenate(all_s)
-        uniq, inv = np.unique(d, return_inverse=True)
-        acc = np.zeros(uniq.size, dtype=np.float64)
-        np.add.at(acc, inv, s)
-        if excluded:
-            live_exc = self._live_term_postings_many(
-                list(dict.fromkeys(excluded))
-            )
-            exc_parts = [
-                dd
-                for _t, (df, ps) in live_exc.items()
-                if df
-                for dd, _tf, _dl in ps
-            ]
-            if exc_parts:
-                exc = np.unique(np.concatenate(exc_parts))
-                kp = ~np.isin(uniq, exc)
-                uniq, acc = uniq[kp], acc[kp]
-                if uniq.size == 0:
-                    return []
-        idx = np.lexsort((uniq, -acc))[: min(k, uniq.size)]
-        return [(int(uniq[i]), float(acc[i])) for i in idx]
-
-    def search_phrase(
-        self, phrase: str, k: int = 50, slop: int = 0
-    ) -> list[tuple[int, float, int]]:
-        """Tiered exact-phrase (or ``slop`` proximity) top-k: each
-        index segment's positional sidecar produces its matches
-        (SearchEngine._phrase_matches — every segment must be built
-        with positions=True), each segment's tombstones drop
-        overridden/deleted docs (segments are docid-disjoint after
-        tombstoning, so surviving matches concatenate), and the
-        pseudo-term scores against the LIVE N/avgdl — score-identical
-        to phrase search on the compacted index (pytest)."""
-        import math
-
-        from .operators.codec import isin_sorted
-
-        per_doc: list[tuple[int, int, int]] = []
-        for i, eng in enumerate(self.engines):
-            m = eng._phrase_matches(phrase, slop=slop)
-            if m is None:
-                continue
-            docs, dls, tfs = m
-            tombs = self.tombstones[i]
-            if tombs.size and docs.size:
-                keep = ~isin_sorted(tombs, docs)
-                docs, dls, tfs = docs[keep], dls[keep], tfs[keep]
-            per_doc.extend(
-                zip(docs.tolist(), dls.tolist(), tfs.tolist())
-            )
-        if not per_doc or not self.n:
-            return []
-        dfm = len(per_doc)
-        idf = math.log((self.n - dfm + 0.5) / (dfm + 0.5) + 1.0)
-        scored = [
-            (
-                int(d),
-                idf * tf * (K1 + 1.0)
-                / (tf + K1 * (1.0 - B + B * dl / self.avgdl)),
-                int(tf),
-            )
-            for d, dl, tf in per_doc
-        ]
-        scored.sort(key=lambda r: (-r[1], r[0]))
-        return scored[:k]
-
-    def search_mixed(
-        self, query: str, k: int = 50, mode: str = "bm25"
-    ) -> list[tuple[int, float]]:
-        """Mixed quoted-phrase query over tiered serving: quoted spans
-        filter conjunctively and score as pseudo-terms (tombstone-aware
-        sidecar matches, live stats); bag terms add their LIVE
-        contributions without expanding the candidate set. A quote-free
-        query delegates to search_local."""
-        import math
-
-        from .operators.codec import isin_sorted
-        from .operators.phrase import parse_query
-
-        bag_text, phrases = parse_query(query)
-        if not phrases:
-            return self.search_local(query, k=k, mode=mode)
-        cand_map: dict[int, tuple[int, float]] = {}
-        for pi, (ptext, pslop) in enumerate(phrases):
-            per_doc: dict[int, tuple[int, int]] = {}
-            for i, eng in enumerate(self.engines):
-                m = eng._phrase_matches(ptext, slop=pslop)
-                if m is None:
-                    continue
-                docs, dls, tfs = m
-                tombs = self.tombstones[i]
-                if tombs.size and docs.size:
-                    keep = ~isin_sorted(tombs, docs)
-                    docs, dls, tfs = docs[keep], dls[keep], tfs[keep]
-                for d, dl, tf in zip(
-                    docs.tolist(), dls.tolist(), tfs.tolist()
-                ):
-                    per_doc[int(d)] = (int(dl), int(tf))
-            if not per_doc:
-                return []
-            dfm = len(per_doc)
-            idf = (
-                math.log((self.n - dfm + 0.5) / (dfm + 0.5) + 1.0)
-                if mode == "bm25"
-                else math.log(self.n / dfm)
-            )
-
-            def pscore(tf, dl):
-                if mode == "bm25":
-                    return idf * tf * (K1 + 1.0) / (
-                        tf + K1 * (1.0 - B + B * dl / self.avgdl)
-                    )
-                return tf * idf
-
-            if pi == 0:
-                cand_map = {
-                    d: (dl, pscore(tf, dl))
-                    for d, (dl, tf) in per_doc.items()
-                }
-            else:
-                cand_map = {
-                    d: (dl, acc + pscore(per_doc[d][1], per_doc[d][0]))
-                    for d, (dl, acc) in cand_map.items()
-                    if d in per_doc
-                }
-            if not cand_map:
-                return []
-        bag_terms = self.analyze(bag_text) if bag_text else []
-        scores = {d: acc for d, (_dl, acc) in cand_map.items()}
-        if bag_terms:
-            live = self._live_term_postings_many(
-                list(dict.fromkeys(bag_terms))
-            )
-            cand_arr = np.array(sorted(scores), dtype=np.int64)
-            for t in dict.fromkeys(bag_terms):
-                df, parts = live[t]
-                if not df:
-                    continue
-                idf = (
-                    bm25_idf(self.n, df)
-                    if mode == "bm25"
-                    else tfidf_idf(self.n, df)
-                )
-                for d, tf, dl in parts:
-                    sel = isin_sorted(cand_arr, d)
-                    if not sel.any():
-                        continue
-                    tfd = tf[sel].astype(np.float64)
-                    if mode == "bm25":
-                        c = idf * tfd * (K1 + 1.0) / (
-                            tfd
-                            + K1
-                            * (
-                                1.0 - B
-                                + B * dl[sel].astype(np.float64)
-                                / self.avgdl
-                            )
-                        )
-                    else:
-                        c = tfd * idf
-                    for doc, add in zip(d[sel].tolist(), c.tolist()):
-                        scores[int(doc)] += float(add)
-        ranked = sorted(scores.items(), key=lambda r: (-r[1], r[0]))
-        return [(d, s) for d, s in ranked[:k]]
+    search_phrase = SearchEngine.search_phrase
+    search_mixed = SearchEngine.search_mixed
+    facet_counts = SearchEngine.facet_counts
 
     # -- search-head features over segments (suggest/correct/fuzzy) -----
-    def _live_df_driver(self, terms: list[str]) -> dict[str, int]:
-        """EXACT live df per term with zero Spark jobs: an append-only
-        segment set (overridden == 0) sums per-segment lexicon point
-        lookups; otherwise the candidate posting lists decode
-        driver-side (bucket-pruned pyarrow reads) and tombstoned
-        entries subtract — the same machinery search_local scores
-        with, reused for df alone."""
-        terms = list(dict.fromkeys(terms))
-        if not terms:
-            return {}
-        if not self.overridden:
-            out: dict[str, int] = {}
-            for eng in self.engines:
-                for t, d in eng.term_df(terms).items():
-                    out[t] = out.get(t, 0) + int(d)
-            return out
-        live = self._live_term_postings_many(terms)
-        return {t: df for t, (df, _parts) in live.items()}
-
     def suggest(self, prefix: str, k: int = 10) -> list[tuple[str, int]]:
         """Tiered autocomplete: top-k LIVE-df terms with the prefix —
         rank-identical to ``suggest`` on the compacted index (pytest).
@@ -1097,8 +414,6 @@ class TieredEngine:
         drop, exactly as the compacted lexicon drops them."""
         import re
 
-        from .engine import EmptyQueryError
-
         p = re.sub(r"[^a-z0-9]", "", (prefix or "").lower())
         if not p:
             raise EmptyQueryError("Empty query")
@@ -1114,10 +429,8 @@ class TieredEngine:
         while i < len(order):
             batch = [t for t, _ in order[i:i + max(k, 8)]]
             i += len(batch)
-            lm = self._live_term_postings_many(batch)
-            live.extend(
-                (t, lm[t][0]) for t in batch if lm[t][0] > 0
-            )
+            lm = query_path.live_df(self, batch)
+            live.extend((t, lm[t]) for t in batch if lm[t] > 0)
             live.sort(key=lambda td: (-td[1], td[0]))
             if (
                 len(live) >= k
@@ -1151,7 +464,7 @@ class TieredEngine:
                 cand_dist[t] = dist  # same edit distance everywhere
         if not cand_dist:
             return []
-        dfs = self._live_df_driver(sorted(cand_dist))
+        dfs = query_path.live_df(self, sorted(cand_dist))
         ranked = sorted(
             (
                 (t, d, dfs.get(t, 0))
@@ -1170,7 +483,7 @@ class TieredEngine:
         appeared in docs since deleted corrects exactly like a typo,
         which is what the compacted index would do. Same contract as
         SearchEngine.fuzzy_terms."""
-        dfm = self._live_df_driver(terms)
+        dfm = query_path.live_df(self, terms)
         out: list[str] = []
         corr: dict[str, str] = {}
         for t in terms:
@@ -1358,78 +671,13 @@ class TieredEngine:
         stats (N/avgdl/df of positive terms) are deliberately
         UNCHANGED — NOT narrows the candidate set, it does not shrink
         the corpus (unlike a deletes segment)."""
-        excluded: list[str] = []
-        required: list[str] = []
-        t_should: list[str] = []
-        t_must: list[str] = []
-        t_not: list[str] = []
-        if negation:
-            from .engine import EmptyQueryError
-            from .functions.analyzer import split_boolean
-
-            should_q, must_q, neg_q = split_boolean(query)
-            if "title:" in (query or "").lower():
-                from .engine import SearchEngine
-
-                (
-                    should_q, must_q, neg_q,
-                    t_should, t_must, t_not, f_contra,
-                ) = SearchEngine._parse_field_clauses(
-                    self, should_q, must_q, neg_q
-                )
-                if f_contra:
-                    return self.spark.createDataFrame(
-                        [], "docid long, score double"
-                    )
-            if neg_q.strip():
-                try:
-                    excluded = self.analyze(neg_q)
-                except EmptyQueryError:
-                    excluded = []
-            if must_q.strip():
-                try:
-                    required = self.analyze(must_q)
-                except EmptyQueryError:
-                    required = []
-            query = f"{should_q} {must_q}".strip()
-            if not query and not (t_should or t_must):
-                return self.spark.createDataFrame(
-                    [], "docid long, score double"
-                )
-        has_fields = bool(t_should or t_must or t_not)
-        if not (query or "").strip():
-            if not has_fields:
-                self.analyze(query)  # blank query raises (400 body)
-            terms = []
-        else:
-            terms = (
-                self.expand_query_terms(query)
-                if "*" in (query or "")
-                else self.analyze(query)
-            )
-        if not terms and not has_fields:
-            return self.spark.createDataFrame(
-                [], "docid long, score double"
-            )
-        from .functions.analyzer import resolve_boolean_overlap
-
-        terms, contradiction = resolve_boolean_overlap(
-            terms,
-            terms if semantics == "and" else required,
-            excluded,
-        )
-        if contradiction or (not terms and not has_fields):
-            return self.spark.createDataFrame(
-                [], "docid long, score double"
-            )
-        required = [t for t in required if t in terms]
-        if has_fields:
-            if semantics == "and" or synonyms or mode == "bm25f":
-                raise ValueError(
-                    "field-scoped terms (title:) compose with OR and "
-                    "+/- only — not with semantics=and, synonyms, or "
-                    "bm25f"
-                )
+        c = query_path.parse(self, query, semantics, negation)
+        query_path.check_flags(self, c, mode, semantics, synonyms)
+        if c.empty:
+            return self.spark.createDataFrame([], "docid long, score double")
+        terms, required, excluded = c.terms, c.must, c.excluded
+        t_should, t_must, t_not = c.t_should, c.t_must, c.t_not
+        if c.fields:
             from pyspark.sql import functions as F
 
             from .operators.scoring import score_exhaustive
@@ -1441,9 +689,7 @@ class TieredEngine:
             # are driver-decoded (bounded by the title dfs — the same
             # IO a title query pays) and shipped as a tiny DataFrame
             # unioned with the live posting decode
-            trows = self._live_title_rows(
-                list(dict.fromkeys(t_should + t_must + t_not))
-            )
+            trows = query_path.title_rows(self, t_should + t_must + t_not)
             title_rows = [
                 (f"title:{t}", int(d), int(tf), int(dl))
                 for t, (td, ttf, tdl) in trows.items()
@@ -1474,11 +720,6 @@ class TieredEngine:
             )
         syn = self._load_synonyms() if synonyms else {}
         if syn:
-            if semantics == "and" or required:
-                raise ValueError(
-                    "synonyms compose with OR/SHOULD semantics only "
-                    "(a synonym group IS a disjunction)"
-                )
             from pyspark.sql import functions as F
 
             from .operators.scoring import score_synonyms
@@ -1510,23 +751,9 @@ class TieredEngine:
                 F.desc("score"), F.asc("docid")
             ).limit(k)
         tombs = self.tombstones
-        if excluded:
-            live_exc = self._live_term_postings_many(
-                list(dict.fromkeys(excluded))
-            )
-            exc_parts = [
-                d
-                for _t, (df, parts) in live_exc.items()
-                if df
-                for d, _tf, _dl in parts
-            ]
-            if exc_parts:
-                exc = np.unique(np.concatenate(exc_parts))
-                tombs = [
-                    np.union1d(t, exc) if t is not None and t.size
-                    else exc
-                    for t in self.tombstones
-                ]
+        exc = query_path.not_docids(self, excluded)
+        if exc.size:
+            tombs = [np.union1d(t, exc) if t.size else exc for t in tombs]
         if semantics == "and" or required:
             from .operators.scoring import score_exhaustive
 
@@ -1577,7 +804,6 @@ class TieredEngine:
         per-query rank-identical to the compacted index's search_many
         (pytest). The bulk-scoring form for training-data mining over a
         still-uncompacted index."""
-        from .engine import EmptyQueryError
         from .operators.wand import search_topk_many
 
         qmap: dict[int, list[str]] = {}
@@ -1614,294 +840,34 @@ class TieredEngine:
         )
 
     def query_response(
-        self, query: str, option_name: str = "tfidf", k: int = 50,
-        path: str = "local", semantics: str = "or",
-        page: int | None = None, per_page: int = 10,
-        phrase: bool = False, fuzzy: bool = False,
-        highlight: bool = False, negation: bool = False,
-        synonyms: bool = False, facets: str | None = None,
-        facet_top: int = 100,
+        self, query: str, option_name: str = "tfidf", path: str = "local",
+        **opts,
     ) -> dict:
-        """The reference HTTP response shape over tiered serving — the
-        shared assembler (engine.py assemble_reference_response) with
-        the override-aware point lookup. ``path='local'`` (default)
-        scores driver-side with zero Spark jobs; ``path='wand'`` routes
-        to the DISTRIBUTED tiered path (search_ids — the block-max
-        kernel for OR, the tombstone-aware exhaustive scorer for AND) —
-        the operator's escape hatch when head-term candidate lists
-        exceed driver memory. Results are identical between the two
-        (pytest); any other path is rejected rather than silently
-        downgraded."""
-        from .engine import assemble_reference_response
-
+        """The reference HTTP response over the segment set — the same
+        query.query_response a single index serves, with the
+        override-aware point lookup. ``path='local'`` (default) scores
+        driver-side with zero Spark jobs; ``path='wand'`` routes to the
+        DISTRIBUTED tiered path (search_ids) — the escape hatch when
+        head-term candidate lists exceed driver memory. Results are
+        identical between the two (pytest); any other path is rejected
+        rather than silently downgraded."""
         if path not in ("local", "wand"):
             raise ValueError(
                 f"unsupported tiered serving path {path!r}: use 'local' "
                 "or 'wand'"
             )
-
-        import os as _os
-
-        # same quoted-span auto-routing as SearchEngine: mixed phrase
-        # semantics when EVERY segment carries the positional sidecar
-        mixed = '"' in (query or "") and all(
-            _os.path.isdir(f"{e.index_dir}/positions")
-            for e in self.engines
+        return query_path.query_response(
+            self, query, option_name, path=path, **opts
         )
-
-        def get_ids(mode):
-            if phrase:
-                return [
-                    (d, s)
-                    for d, s, _tf in self.search_phrase(query, k=k)
-                ]
-            if mixed:
-                if negation:
-                    # same composition as SearchEngine: strip -terms,
-                    # over-fetch by |excluded live docids|, filter
-                    from .engine import EmptyQueryError
-                    from .functions.analyzer import split_negations
-
-                    pos_q, neg_q = split_negations(query)
-                    exc: set[int] = set()
-                    if neg_q.strip():
-                        try:
-                            ex_terms = self.analyze(neg_q)
-                        except EmptyQueryError:
-                            ex_terms = []
-                        if ex_terms:
-                            live_exc = self._live_term_postings_many(
-                                list(dict.fromkeys(ex_terms))
-                            )
-                            exc = {
-                                int(x)
-                                for _t, (df, parts) in live_exc.items()
-                                if df
-                                for d, _tf, _dl in parts
-                                for x in d
-                            }
-                    # capped + iteratively deepened over-fetch —
-                    # same exact contract as SearchEngine (a high-df
-                    # excluded term must not size the heap)
-                    k_full = k + len(exc)
-                    k_eff = min(k_full, max(4 * k, k + 64))
-                    while True:
-                        res = self.search_mixed(
-                            pos_q, k=k_eff, mode=mode
-                        )
-                        out = [
-                            (d, s) for d, s in res if d not in exc
-                        ][:k]
-                        if (
-                            len(out) >= k
-                            or len(res) < k_eff
-                            or k_eff >= k_full
-                        ):
-                            return out
-                        k_eff = min(k_full, 4 * k_eff)
-                return self.search_mixed(query, k=k, mode=mode)
-            if path == "wand":
-                return [
-                    (r["docid"], r["score"])
-                    for r in self.search_ids(
-                        query, k=k, mode=mode, semantics=semantics,
-                        negation=negation, synonyms=synonyms,
-                    ).collect()
-                ]
-            return self.search_local(
-                query, k=k, mode=mode, semantics=semantics, fuzzy=fuzzy,
-                negation=negation, synonyms=synonyms,
-            )
-
-        if fuzzy and path != "local":
-            # same contract as SearchEngine.query_response: corrections
-            # come from the driver-side SymSpell layouts
-            raise ValueError(
-                "fuzzy (did-you-mean) is served by the local path"
-            )
-        # highlight/corrections analyze the POSITIVE part only — an
-        # excluded term never appears in results
-        hl_query = query
-        if negation:
-            from .functions.analyzer import split_negations
-
-            hl_query = split_negations(query)[0]
-        decorate = None
-        if highlight:
-            from .functions.textstats import highlight_snippet
-
-            hterms = set(self.analyze(hl_query))
-            if fuzzy:
-                hterms |= set(
-                    self.fuzzy_terms(self.analyze(query))[0]
-                )
-            analyzer = self.engines[0].analyzer
-
-            def decorate(s, _t=frozenset(hterms)):
-                return highlight_snippet(s, _t, analyzer)
-
-        resp = assemble_reference_response(
-            query, option_name, self.analyze, get_ids, self.lookup_docs,
-            page=page, per_page=per_page, decorate_snippet=decorate,
-        )
-        if fuzzy and resp.get("success") is not False:
-            _t, corr = self.fuzzy_terms(self.analyze(query))
-            if corr:
-                resp["corrections"] = corr
-        if facets and resp.get("success") is not False:
-            resp["facets"] = {
-                f: self.facet_counts(
-                    query, field=f, negation=negation, top=facet_top
-                )
-                for f in (s.strip() for s in facets.split(","))
-                if f
-            }
-        return resp
-
-    def facet_fields(self) -> list[str]:
-        """Facet fields servable across this segment list: the
-        intersection of every segment's available fields (a count that
-        silently skipped a segment would be wrong, not partial)."""
-        fields = None
-        for eng in self.engines:
-            f = set(eng.facet_fields())
-            fields = f if fields is None else (fields & f)
-        from .plans.build import FACET_COLUMNS
-
-        return [c for c in FACET_COLUMNS if c in (fields or set())]
-
-    def _facet_arrays(self, field: str):
-        """Per-segment doc-values for one facet field, tombstones
-        already dropped (docid-sorted ids + int codes into ONE unified
-        category list) — cached per TieredEngine instance. Segments
-        are docid-disjoint after tombstoning, so per-segment counts
-        just sum."""
-        from .operators.codec import isin_sorted
-
-        cache = getattr(self, "_facet_cache", None)
-        if cache is None:
-            cache = self._facet_cache = {}
-        if field in cache:
-            return cache[field]
-        if field not in self.facet_fields():
-            raise ValueError(
-                f"unknown facet field {field!r}; this segment list "
-                f"serves: {self.facet_fields() or 'none'}"
-            )
-        seg_raw = []
-        all_cats: set = set()
-        for i, eng in enumerate(self.engines):
-            by_salt, cats = eng._facet_arrays(field)
-            tombs = self.tombstones[i]
-            ds, cs = [], []
-            for _salt, (fd, codes) in by_salt.items():
-                if tombs is not None and tombs.size and fd.size:
-                    keep = ~isin_sorted(tombs, fd)
-                    fd, codes = fd[keep], codes[keep]
-                ds.append(fd)
-                cs.append(codes)
-            d = (
-                np.concatenate(ds) if ds else np.empty(0, np.int64)
-            )
-            c = (
-                np.concatenate(cs) if cs else np.empty(0, np.int32)
-            )
-            order = np.argsort(d, kind="stable")
-            seg_raw.append((d[order], c[order], cats))
-            all_cats.update(cats)
-        cats = sorted(all_cats, key=lambda x: (x is None, x or ""))
-        code_of = {c: i for i, c in enumerate(cats)}
-        segs = []
-        for d, c, seg_cats in seg_raw:
-            remap = np.array(
-                [code_of[x] for x in seg_cats], np.int32
-            ) if seg_cats else np.empty(0, np.int32)
-            segs.append((d, remap[c] if c.size else c))
-        cache[field] = (segs, cats)
-        return cache[field]
-
-    def facet_counts(
-        self, query: str, field: str = "lang", negation: bool = False,
-        top: int = 100,
-    ) -> dict:
-        """Per-facet LIVE doc counts over the full match set of a
-        tiered segment list — tombstoned/overridden docs never count,
-        so the result equals the compacted index's facet_counts
-        (pytest). Same bounded shape as the single-index head: match
-        set from the live posting decodes, facet values from cached
-        per-segment doc-values. ``+must`` and ``title:`` clauses raise
-        ValueError (engine.facet_query_terms)."""
-        from .engine import facet_query_terms
-
-        parsed = facet_query_terms(self, query, negation)
-        if parsed is None:
-            return {}
-        terms, excluded = parsed
-        segs, cats = self._facet_arrays(field)
-        live = self._live_term_postings_many(
-            list(dict.fromkeys(terms + excluded))
-        )
-        def _docids(ts):
-            parts = [
-                d
-                for t in ts
-                for d, _tf, _dl in live.get(t, (0, []))[1]
-            ]
-            return (
-                np.unique(np.concatenate(parts))
-                if parts
-                else np.empty(0, np.int64)
-            )
-        matched = _docids(dict.fromkeys(terms))
-        if excluded and matched.size:
-            exc = _docids(dict.fromkeys(excluded))
-            if exc.size:
-                matched = matched[~np.isin(matched, exc)]
-        totals = np.zeros(len(cats), np.int64)
-        for fd, codes in segs:
-            if not matched.size or not fd.size:
-                continue
-            p = np.searchsorted(fd, matched)
-            p = np.minimum(p, fd.size - 1)
-            hit = fd[p] == matched
-            totals += np.bincount(
-                codes[p[hit]], minlength=len(cats)
-            ).astype(np.int64)
-        ranked = sorted(
-            (
-                (("" if c is None else c), int(n))
-                for c, n in zip(cats, totals)
-                if n > 0
-            ),
-            key=lambda kv: (-kv[1], kv[0]),
-        )
-        return dict(ranked[: max(1, int(top))])
 
     def lookup_docs(
         self, docids: list[int], with_images: bool = True
     ) -> list[dict]:
-        """Point-lookup hydration across segments — later segments win
-        per docid (same pruned pyarrow reads as SearchEngine). Each
-        segment is only asked for ids NOT tombstoned at its position:
-        a re-crawled doc hydrates from the overriding segment, and a
-        doc removed by a deletes segment hydrates from nowhere (the
+        """Point-lookup hydration across segments, later segments
+        winning per docid: a re-crawled doc hydrates from the overriding
+        segment and a doc removed by a deletes segment from nowhere (the
         HTTP-path guarantee that a taken-down doc never resurfaces)."""
-        from .operators.codec import isin_sorted
-
-        out: dict[int, dict] = {}
-        ids = np.asarray(docids, dtype=np.int64)
-        for i, eng in enumerate(self.engines):  # oldest first
-            tombs = self.tombstones[i]
-            live = (
-                ids[~isin_sorted(tombs, ids)] if tombs.size else ids
-            )
-            if not live.size:
-                continue
-            for row in eng.lookup_docs(
-                [int(d) for d in live], with_images=with_images
-            ):
-                out[row["docid"]] = row
-        return [out[d] for d in docids if d in out]
+        return query_path.lookup_docs(self, docids, with_images)
 
 
 def compact(

@@ -475,8 +475,6 @@ class SearchEngine:
         no row (zero boost)."""
         import os
 
-        import numpy as np
-
         cached = getattr(self, "_rank_cache", None)
         if cached is not None:
             return cached
@@ -855,7 +853,6 @@ class SearchEngine:
         nothing matches. tf counts distinct start positions."""
         import os
 
-        import numpy as np
         import pyarrow as pa
         import pyarrow.dataset as pads
 
@@ -1367,8 +1364,6 @@ class SearchEngine:
         facet column no longer fits the driver, the distributed twin
         is the facet_counts entry operator (same semantics, one Spark
         job)."""
-        import numpy as np
-
         cache = getattr(self, "_facet_cache", None)
         if cache is None:
             cache = self._facet_cache = {}

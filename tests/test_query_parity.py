@@ -28,7 +28,7 @@ def _words(text):
 
 @pytest.fixture(scope="module")
 def titled_rows(corpus_rows):
-    """The session corpus with one text word in each page's title (the
+    """The shared test corpus with one text word in each page's title (the
     title is the url slug), so ``title:`` clauses discriminate. Link
     targets fold onto the corpus's own pages so PageRank has a graph."""
     slug = {}
